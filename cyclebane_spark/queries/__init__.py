@@ -61,149 +61,6 @@ _MODULES = (
     'multimodal_q',
 )
 
-# The driver round this _PRIORITY window was rotated FOR. The rotation
-# contract test evaluates the window against CORRECTNESS files for rounds
-# < _WINDOW_ROUND only, so the driver committing round N's results can
-# never redden a window that was (correctly) built before they existed.
-# Bump this together with every rotation.
-_WINDOW_ROUND = 12
-
-# Queries whose CODE PATH changed since their last driver-green row
-# (including via shared-helper edits). The rotation contract
-# (tests/test_priority_window.py) requires every one of these to hold a
-# window slot, after any driver-red rows.
-# Round 12 carries forward two r11 groups the driver has not verified yet
-# (VERDICT r11 "Next round #1"):
-# - the nine r10-green rows that overflowed r11's all-required window
-#   (changed by the r11 optimization, verified locally, never sampled);
-# - the four query paths changed in the r11 end-of-round snapshot commit
-#   (518bbbd) WITHOUT a window flag — dedup_tf_cosine_pairs,
-#   events_cogroup_asof_pandas, pipeline_clean_corpus,
-#   text_bigram_lm_score. All four verified oracle-exact locally at
-#   sf0.001/0.01/0.1 again this round (OPTIMIZATION_r12.md).
-_CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # r11 overflow (changed r11, newest driver green r10)
-    'graph_label_propagation',
-    'pipeline_cluster_balanced_sample',
-    'pipeline_entity_resolution',
-    'q1_pricing_summary',
-    'quality_source_overlap',
-    'quality_source_overlap_hll',
-    'sketch_cms_frequency',
-    'text_unigram_segment',
-    'text_unigram_train_step',
-    # r11 snapshot-commit changes, unflagged until now (VERDICT r11 #1)
-    'dedup_tf_cosine_pairs',
-    'events_cogroup_asof_pandas',
-    'pipeline_clean_corpus',
-    'text_bigram_lm_score',
-    # r12 optimization: spread_small before the heavy numpy decode loops
-    # (measured keep; the six cheap-header siblings measured slower and
-    # were reverted — OPTIMIZATION_r12.md batch 2)
-    'multimodal_resize_pixels',
-    'multimodal_scene_cuts',
-    # r12 optimization: hamming-verify before the pair distinct (shuffle
-    # fewer bytes at scale; locally flat, results identical)
-    'multimodal_phash_dedup',
-    # r12 optimization: spread_batch before the per-batch band fold in
-    # _near_dup_step (10.4s -> 3.5s at sf0.1)
-    'stream_near_dup_filter',
-    # r12 optimization: layout-gated AQE-elastic edge repartition in
-    # _connected_components (shared helper — every CC consumer flagged;
-    # pipeline_entity_resolution / pipeline_cluster_balanced_sample
-    # already hold slots above)
-    'dedup_connected_components',
-    'pipeline_leakage_safe_split',
-    'pipeline_embedding_clusters',
-    'dedup_cluster_representatives',
-    'dedup_cc_incremental',
-    'dedup_bcubed_eval',
-    # r12 optimization: overlapped replay-landing writes in
-    # late_replay_dir (guide 2.6); audit 3.32->2.91s, backfill
-    # 3.80->3.39s interleaved A/B at sf0.1
-    'stream_late_data_audit',
-    'stream_late_backfill_merge',
-    # r12 optimization: candidate-set spread before the exact verify in
-    # _prefix_filter_pairs (4.37->2.08s interleaved A/B at sf0.1)
-    'dedup_jaccard_prefix_filter',
-)
-
-# Explicit registry ordering. External correctness gates sample the registry
-# in iteration order (each round checks the first 50 entries), so the window
-# is rotated per round to retire the stalest driver signal. Rotation rule
-# (r4 VERDICT, enforced by tests/test_priority_window.py): driver-red first,
-# then changed-since-green, then never-seen, then oldest-green backfill.
-# The contract is on window MEMBERSHIP, not position: tiers 1-3 must hold a
-# slot somewhere in the first 50; tier-4 backfill must be stalest-first.
-# Round-12 rotation: no driver-red rows (r11 was 50/50 green), no
-# never-seen registrations (every name has been sampled by r11). Required
-# tier 2 = the _CHANGED_THIS_ROUND rows (r11 overflow nine + the four
-# unflagged snapshot-commit changes + this round's r12 changes), which
-# head the window stalest-first; the remaining slots backfill the stalest
-# driver-green signal, the alphabetical prefix of the 42-row r6 cohort.
-# Regenerate with tools/rotate_window.py after any change to
-# _CHANGED_THIS_ROUND.
-_PRIORITY = (
-    # changed since green, newest driver green r7
-    'multimodal_phash_dedup',
-    # r8
-    'multimodal_resize_pixels',
-    'pipeline_clean_corpus',
-    # r9
-    'events_cogroup_asof_pandas',
-    'stream_late_backfill_merge',
-    'stream_late_data_audit',
-    # r10
-    'dedup_tf_cosine_pairs',
-    'graph_label_propagation',
-    'multimodal_scene_cuts',
-    'pipeline_cluster_balanced_sample',
-    'pipeline_entity_resolution',
-    'q1_pricing_summary',
-    'quality_source_overlap',
-    'quality_source_overlap_hll',
-    'sketch_cms_frequency',
-    'stream_near_dup_filter',
-    'text_bigram_lm_score',
-    'text_unigram_segment',
-    'text_unigram_train_step',
-    # r11 (this round's CC / prefix-filter changes)
-    'dedup_bcubed_eval',
-    'dedup_cc_incremental',
-    'dedup_cluster_representatives',
-    'dedup_connected_components',
-    'dedup_jaccard_prefix_filter',
-    'pipeline_embedding_clusters',
-    'pipeline_leakage_safe_split',
-    # stalest-green backfill (r6 cohort, alphabetical prefix)
-    'ann_ivf_blocked_topk',
-    'ann_rp_lsh_topk',
-    'argmax_per_group',
-    'argmin_cheapest_supplier',
-    'array_functions',
-    'conditional_agg_shipmodes',
-    'count_distinct_exact',
-    'cube_flag_status',
-    'date_functions',
-    'distinct_pairs',
-    'groupingsets_flag_status',
-    'join_anti',
-    'join_range_band',
-    'join_semi',
-    'map_functions',
-    'promo_revenue_ratio',
-    'q13_customer_distribution',
-    'q19_disjunctive_predicates',
-    'q22_idle_rich_customers',
-    'q6_forecast_revenue',
-    'q7_volume_shipping',
-    'q8_market_share',
-    'q9_product_type_profit',
-    'rollup_order_priority',
-    'sample_hash_based',
-    'sample_stratified',
-)
-
 
 def _load() -> None:
     for mod in _MODULES:
@@ -211,13 +68,9 @@ def _load() -> None:
 
 
 def registry() -> dict[str, Query]:
+    """Every registered query, in registration order."""
     _load()
-    missing = [n for n in _PRIORITY if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f'_PRIORITY names not registered: {missing}')
-    ordered = {n: _REGISTRY[n] for n in _PRIORITY}
-    ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
-    return ordered
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

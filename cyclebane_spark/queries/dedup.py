@@ -2176,6 +2176,10 @@ _KCORE_ROUNDS = 3
 
 
 def _sql_kcore_round(r: int) -> str:
+    # MATERIALIZED: DuckDB inlines a plain CTE at every reference, and each
+    # round reads the previous edge list five times, so three inlined
+    # rounds take minutes to plan; materialized, the oracle takes about a
+    # second at sf0.001
     prev = f'e{r - 1}'
     return f""",
     d{r} AS (
@@ -2185,7 +2189,7 @@ def _sql_kcore_round(r: int) -> str:
         ) GROUP BY v
     ),
     v{r} AS (SELECT v FROM d{r} WHERE deg >= {_KCORE_K}),
-    e{r} AS (
+    e{r} AS MATERIALIZED (
         SELECT doc_a, doc_b FROM {prev}
         WHERE doc_a IN (SELECT v FROM v{r})
           AND doc_b IN (SELECT v FROM v{r})

@@ -3849,7 +3849,10 @@ def _sql_unigram_ctes() -> str:
             FROM dp{j - L} p
             JOIN vocab v ON substr(p.word, {j - L + 1}, {L}) = v.piece
             WHERE p.wl >= {j}""")
-        dps.append(f"""dp{j} AS (
+        # MATERIALIZED for the same reason as the soft trainer's frames
+        # below: inlined, each dp frame re-expands every earlier one per
+        # reference, and DuckDB spends most of the oracle's time planning
+        dps.append(f"""dp{j} AS MATERIALIZED (
         SELECT word, wl, v, toks, n FROM (
             SELECT *, ROW_NUMBER() OVER (
                 PARTITION BY word ORDER BY v DESC, toks

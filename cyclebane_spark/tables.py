@@ -108,29 +108,34 @@ SPREAD_MAX_BYTES_CONF = 'spark.cyclebane.spread.maxBytes'
 SPREAD_MAX_BYTES_DEFAULT = 1 << 30
 
 
+def _spread_max_bytes(spark: SparkSession) -> int:
+    """The byte cap every layout gate reads. A value <= 1 is the kill
+    switch: :func:`provably_small` is then False and no spread helper
+    touches the plan (the A/B toggle used by tests and measurements)."""
+    return int(spark.conf.get(SPREAD_MAX_BYTES_CONF, str(SPREAD_MAX_BYTES_DEFAULT)))
+
+
 def provably_small(df: DataFrame) -> bool:
     """True iff ``df``'s input layout is PROVABLY small and local: fewer
     files than ``defaultParallelism``, every file a stat-able ``file:``
-    path, total bytes within ``spark.cyclebane.spread.maxBytes``. False on
+    path, total bytes within ``spark.cyclebane.spread.maxBytes`` (so False
+    whenever the kill switch sets that cap <= 1). False on
     any doubt (remote storage, un-statable paths, no file info — e.g. a
     foreachBatch DataFrame, whose ``inputFiles()`` is empty) — i.e. false
     in every production layout, so callers can key layout-only plan
     adjustments on it without ever touching the plan at scale."""
     import os
 
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    max_bytes = _spread_max_bytes(df.sparkSession)
+    if max_bytes <= 1:
+        return False
+    par = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:
         return False
     if not files or len(files) >= par:
         return False
-    max_bytes = int(
-        df.sparkSession.conf.get(
-            SPREAD_MAX_BYTES_CONF, str(SPREAD_MAX_BYTES_DEFAULT)
-        )
-    )
     from urllib.parse import unquote
 
     total = 0
@@ -194,17 +199,12 @@ def spread_batch(df: DataFrame, *key_cols: str) -> DataFrame:
     is guide §2.5's "one huge unsplittable file -> repartition immediately
     after the read", scoped to the batch.
 
-    Honors the same ``spark.cyclebane.spread.maxBytes`` kill-switch as
-    spread_small (a value <= 1 disables every spread helper — the A/B
-    toggle used by tests and measurements).
+    Honors the same ``spark.cyclebane.spread.maxBytes`` kill switch as
+    every other layout gate (see :func:`_spread_max_bytes`).
     """
-    spark = df.sparkSession
-    max_bytes = int(
-        spark.conf.get(SPREAD_MAX_BYTES_CONF, str(SPREAD_MAX_BYTES_DEFAULT))
-    )
-    if max_bytes <= 1:
+    if _spread_max_bytes(df.sparkSession) <= 1:
         return df
-    par = spark.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
     except Exception:

@@ -200,11 +200,121 @@ def duckdb_checksum(con, sql: str, cols, double_cols=()):
     )
 
 
-def main() -> int:
+def connect(sf_dir: str):
+    """DuckDB connection with one view per table present under ``sf_dir``."""
     import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f'{sf_dir}/{t}.parquet'
+        if os.path.isdir(p):  # Spark-written multi-file table (e.g. sf1)
+            p = f'{p}/*.parquet'
+        if p.endswith('*.parquet') or os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def _reject_nested(df) -> None:
+    """Compatibility gate for the external correctness harness: it
+    canonicalizes through pandas sort_values, which cannot factorize
+    list/dict cells — an array/map-typed output column passes a lenient
+    local compare but hard-errors there. Reject it here so the local gate
+    predicts the external one (in checksum mode too, where a pass must not
+    mask it)."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    nested = [
+        f.name for f in df.schema.fields if isinstance(f.dataType, (ArrayType, MapType))
+    ]
+    if nested:
+        raise TypeError(
+            f'array/map-typed output columns {nested} — the external harness '
+            'cannot canonicalize these; emit a joined string or exploded '
+            'rows instead'
+        )
+
+
+def _check_checksum(spark, con, query, sf_dir) -> tuple[str, str]:
+    try:
+        df = query.fn(spark, sf_dir)
+        _reject_nested(df)
+        ocols = sorted(df.columns)
+        tcols = sorted(
+            d[0] for d in con.execute(f'SELECT * FROM ({query.oracle}) LIMIT 0').description
+        )
+        if ocols != tcols:
+            raise ValueError(f'schema {ocols} != {tcols}')
+        dbl = double_columns(df)
+        ours = spark_checksum(df)
+        theirs = duckdb_checksum(con, query.oracle, ocols, dbl)
+    except Exception as exc:  # noqa: BLE001
+        return 'FAIL', f'checksum error: {exc}'
+    n, _, x = ours
+    if ours != theirs:
+        return 'FAIL', f'checksum {ours} != {theirs}'
+    if dbl:
+        return 'ok~', f'({n} rows, checksum-exact x={x}; doubles {dbl} quantized at 1e-9)'
+    return 'ok', f'({n} rows, checksum-exact x={x})'
+
+
+def _check_canon(spark, con, query, sf_dir) -> tuple[str, str]:
+    try:
+        df = query.fn(spark, sf_dir)
+        _reject_nested(df)
+        ours = df.toPandas()
+        # Same class of hazard, probed the way the external harness hits it:
+        # sort every column pandas-side and surface any TypeError.
+        ours.sort_values(by=sorted(ours.columns), kind='mergesort')
+    except Exception as exc:  # noqa: BLE001
+        return 'FAIL', f'spark error: {exc}'
+    if query.oracle is None:
+        return '----', f'no oracle ({len(ours)} rows)'
+    try:
+        theirs = con.execute(query.oracle).df()
+    except Exception as exc:  # noqa: BLE001
+        return 'FAIL', f'oracle error: {exc}'
+    ocols, okinds, orows = canon(ours)
+    tcols, tkinds, trows = canon(theirs)
+    if ocols != tcols:
+        return 'FAIL', f'schema {ocols} != {tcols}'
+    if okinds != tkinds:
+        return 'FAIL', f'dtype kinds\n  ours  ={okinds}\n  oracle={tkinds}'
+    if len(orows) != len(trows):
+        return 'FAIL', f'rowcount {len(orows)} != {len(trows)}'
+    all_exact = True
+    for i, (ra, rb) in enumerate(zip(orows, trows)):
+        ok, exact = cells_equal(ra, rb)
+        if not ok:
+            return 'FAIL', f'row {i}:\n  ours  ={ra!r}\n  oracle={rb!r}'
+        all_exact = all_exact and exact
+    if not all_exact:
+        return 'ok~', f'({len(orows)} rows; float-tolerance only — a hash compare may differ!)'
+    return 'ok', f'({len(orows)} rows, exact)'
+
+
+def check_query(spark, con, query, sf_dir: str, checksum: bool = False) -> tuple[str, str]:
+    """Run one registry ``Query`` against its DuckDB oracle on ``con``.
+
+    Returns ``(status, detail)``. ``status`` is ``'ok'`` (exact), ``'ok~'``
+    (equal only within the float tolerance, or checksum-equal with doubles
+    quantized), ``'FAIL'``, or ``'----'`` (no oracle to compare with).
+    The session time zone is pinned to UTC while the query runs and
+    restored afterwards.
+    """
+    if checksum and query.oracle is None:
+        return '----', 'no oracle (skipped in checksum mode)'
+    prev_tz = spark.conf.get('spark.sql.session.timeZone')
+    spark.conf.set('spark.sql.session.timeZone', 'UTC')
+    try:
+        return (_check_checksum if checksum else _check_canon)(spark, con, query, sf_dir)
+    finally:
+        spark.conf.set('spark.sql.session.timeZone', prev_tz)
+
+
+def main() -> int:
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entry
+    from cyclebane_spark.queries import registry
 
     args = sys.argv[1:]
     use_checksum = '--checksum' in args
@@ -217,158 +327,33 @@ def main() -> int:
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.sql.session.timeZone', 'UTC')
         .config('spark.driver.memory', '8g')
         .appName('oracle-check')
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel('ERROR')
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f'{sf_dir}/{t}.parquet'
-        if os.path.isdir(p):  # Spark-written multi-file table (e.g. sf1)
-            p = f'{p}/*.parquet'
-        if p.endswith('*.parquet') or os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(sf_dir)
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    failures, exact_misses, no_oracle = [], [], []
-    n_checked = 0
-    for name, fn in qs.items():
+    counts = {'ok': 0, 'ok~': 0, 'FAIL': 0, '----': 0}
+    exact_misses = []
+    for name, query in registry().items():
         if only and name not in only:
             continue
-        n_checked += 1
-        sql = oracles.get(name)
-        if use_checksum:
-            if sql is None:
-                no_oracle.append(name)
-                print(f'---- {name}: no oracle (skipped in checksum mode)')
-                continue
-            try:
-                df = fn(spark, sf_dir)
-                # same driver-harness compatibility gate as the full-canon
-                # path: nested output columns hard-error in the external
-                # compare, so a checksum pass here must not mask that
-                from pyspark.sql.types import ArrayType, MapType
-
-                nested = [
-                    f.name
-                    for f in df.schema.fields
-                    if isinstance(f.dataType, (ArrayType, MapType))
-                ]
-                if nested:
-                    raise TypeError(
-                        f'array/map-typed output columns {nested} — the '
-                        'driver harness cannot canonicalize these; emit a '
-                        'joined string or exploded rows instead'
-                    )
-                ocols = sorted(df.columns)
-                tcols = sorted(
-                    d[0] for d in con.execute(f'SELECT * FROM ({sql}) LIMIT 0').description
-                )
-                if ocols != tcols:
-                    raise ValueError(f'schema {ocols} != {tcols}')
-                dbl = double_columns(df)
-                on, os_, ox = spark_checksum(df)
-                tn, ts, tx = duckdb_checksum(con, sql, ocols, dbl)
-            except Exception as exc:  # noqa: BLE001
-                failures.append((name, f'checksum error: {exc}'))
-                print(f'FAIL {name}: checksum error: {exc}')
-                continue
-            if (on, os_, ox) != (tn, ts, tx):
-                failures.append(
-                    (name, f'checksum ({on},{os_},{ox}) != ({tn},{ts},{tx})')
-                )
-                print(
-                    f'FAIL {name}: checksum ({on},{os_},{ox}) != ({tn},{ts},{tx})'
-                )
-            elif dbl:
-                exact_misses.append(name)
-                print(
-                    f'ok~  {name} ({on} rows, checksum-exact x={ox}; '
-                    f'doubles {dbl} quantized at 1e-9)'
-                )
-            else:
-                print(f'ok   {name} ({on} rows, checksum-exact x={ox})')
-            continue
-        try:
-            df = fn(spark, sf_dir)
-            # Driver-harness compatibility gate: the external compare
-            # canonicalizes through pandas sort_values, which cannot
-            # factorize list/dict cells — an array/map-typed output column
-            # passes a lenient local compare but hard-errors there. Reject
-            # it here so the local gate predicts the driver gate.
-            from pyspark.sql.types import ArrayType, MapType
-
-            nested = [
-                f.name
-                for f in df.schema.fields
-                if isinstance(f.dataType, (ArrayType, MapType))
-            ]
-            if nested:
-                raise TypeError(
-                    f'array/map-typed output columns {nested} — the driver '
-                    'harness cannot canonicalize these; emit a joined '
-                    'string or exploded rows instead'
-                )
-            ours = df.toPandas()
-            # Same class of hazard, probed the way the driver hits it:
-            # sort every column pandas-side and surface any TypeError.
-            ours.sort_values(by=sorted(ours.columns), kind='mergesort')
-        except Exception as exc:  # noqa: BLE001
-            failures.append((name, f'spark error: {exc}'))
-            print(f'FAIL {name}: spark error: {exc}')
-            continue
-        if sql is None:
-            no_oracle.append(name)
-            print(f'---- {name}: no oracle ({len(ours)} rows)')
-            continue
-        try:
-            theirs = con.execute(sql).df()
-        except Exception as exc:  # noqa: BLE001
-            failures.append((name, f'oracle error: {exc}'))
-            print(f'FAIL {name}: oracle error: {exc}')
-            continue
-        ocols, okinds, orows = canon(ours)
-        tcols, tkinds, trows = canon(theirs)
-        if ocols != tcols:
-            failures.append((name, f'schema {ocols} != {tcols}'))
-            print(f'FAIL {name}: schema {ocols} != {tcols}')
-            continue
-        if okinds != tkinds:
-            failures.append((name, f'dtype kinds {okinds} != {tkinds}'))
-            print(f'FAIL {name}: dtype kinds\n  ours  ={okinds}\n  oracle={tkinds}')
-            continue
-        if len(orows) != len(trows):
-            failures.append((name, f'rowcount {len(orows)} != {len(trows)}'))
-            print(f'FAIL {name}: rowcount {len(orows)} != {len(trows)}')
-            continue
-        bad = exact = None
-        all_exact = True
-        for i, (ra, rb) in enumerate(zip(orows, trows)):
-            ok, ex = cells_equal(ra, rb)
-            all_exact = all_exact and ex
-            if not ok:
-                bad = (i, ra, rb)
-                break
-        if bad:
-            failures.append((name, f'row {bad[0]}: {bad[1]!r} != {bad[2]!r}'))
-            print(f'FAIL {name}: row {bad[0]}:\n  ours  ={bad[1]!r}\n  oracle={bad[2]!r}')
-        elif not all_exact:
+        status, detail = check_query(spark, con, query, sf_dir, use_checksum)
+        counts[status] += 1
+        if status == 'ok~':
             exact_misses.append(name)
-            print(f'ok~  {name} ({len(orows)} rows; float-tolerance only — driver hash may differ!)')
-        else:
-            print(f'ok   {name} ({len(orows)} rows, exact)')
+        sep = ': ' if status in ('FAIL', '----') else ' '
+        print(f'{status:<4} {name}{sep}{detail}', flush=True)
 
     print(
-        f'\n{n_checked - len(failures) - len(no_oracle)} matched '
-        f'({len(exact_misses)} tolerance-only), {len(failures)} failed, '
-        f'{len(no_oracle)} rows-only'
+        f"\n{counts['ok'] + counts['ok~']} matched "
+        f"({counts['ok~']} tolerance-only), {counts['FAIL']} failed, "
+        f"{counts['----']} rows-only"
     )
     if exact_misses:
         print('tolerance-only (fix for driver hash):', ', '.join(exact_misses))
-    return 1 if failures else 0
+    return 1 if counts['FAIL'] else 0
 
 
 if __name__ == '__main__':

@@ -1372,3 +1372,35 @@ def test_provably_small_predicate(spark, tmp_path):
             spark.conf.unset(SPREAD_MAX_BYTES_CONF)
         else:
             spark.conf.set(SPREAD_MAX_BYTES_CONF, old)
+
+
+@pytest.mark.parametrize('cap', ['1', '0'])
+def test_spread_kill_switch_disables_every_gate(spark, tmp_path, cap):
+    """spark.cyclebane.spread.maxBytes <= 1 turns every layout gate off,
+    on the input each of them would otherwise act on: one small local
+    file. provably_small is False, spread_small and spread_batch return
+    the input unchanged, and spread_cluster keeps only the exchange it
+    always adds, with AQE-elastic sizing (no pinned partition count)."""
+    require_spread(spark)
+    from cyclebane_spark import tables
+
+    path = str(tmp_path / 'single')
+    spark.range(0, 1000).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    assert tables.provably_small(one)
+
+    def logical(df):
+        return df._jdf.queryExecution().logical().toString()
+
+    old = spark.conf.get(tables.SPREAD_MAX_BYTES_CONF, None)
+    spark.conf.set(tables.SPREAD_MAX_BYTES_CONF, cap)
+    try:
+        assert not tables.provably_small(one)
+        assert tables.spread_small(one, 'id') is one
+        assert tables.spread_batch(one, 'id') is one
+        assert logical(tables.spread_cluster(one, 'id')) == logical(one.repartition('id'))
+    finally:
+        if old is None:
+            spark.conf.unset(tables.SPREAD_MAX_BYTES_CONF)
+        else:
+            spark.conf.set(tables.SPREAD_MAX_BYTES_CONF, old)

@@ -111,111 +111,6 @@ def test_map_order_of_independent_sources_is_isomorphic(a, b):
     assert sorted(d for _, d in g1.degree) == sorted(d for _, d in g2.degree)
 
 
-# -- hypothesis-driven differential vs the reference library -----------------
-#
-# The seeded randomized differential (test_reference_differential.py) samples
-# a fixed distribution; hypothesis searches the space adversarially and
-# SHRINKS failures to minimal workflows.
-
-import sys
-
-sys.path.insert(0, '/root/reference/src')
-import cyclebane as _ref_cb  # noqa: E402
-
-
-def _canon(nxg):
-    nodes = sorted(str(n) for n in nxg.nodes)
-    edges = sorted((str(a), str(b)) for a, b in nxg.edges)
-    attrs = sorted(
-        (str(n), sorted((k, str(v)) for k, v in d.items()))
-        for n, d in nxg.nodes(data=True)
-    )
-    return nodes, edges, attrs
-
-
-_OPS = st.sampled_from(['reduce_all', 'reduce_dim0', 'groupby', 'slice'])
-
-
-@given(
-    values=st.lists(st.integers(-99, 99), min_size=2, max_size=6),
-    labels_src=st.lists(st.sampled_from('pqr'), min_size=6, max_size=6),
-    second=st.one_of(st.none(), st.lists(st.integers(0, 9), min_size=1, max_size=3)),
-    op=_OPS,
-    lo=st.integers(0, 2),
-)
-@settings(max_examples=60, deadline=None)
-def test_hypothesis_differential_matches_reference(values, labels_src, second, op, lo):
-    labels = labels_src[: len(values)]
-
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w'), ('u', 'w')]))
-        g = g.map(pd.DataFrame({'v': values, 'lab': labels}))
-        if second is not None:
-            g = g.map({'u': second})
-        if op == 'reduce_all':
-            return g.reduce('w', name='out')
-        if op == 'reduce_dim0':
-            return g.reduce('w', index='dim_0', name='out')
-        if op == 'groupby':
-            return g.groupby('lab').reduce('w', name='out')
-        g = g.by_position('dim_0')[lo : lo + 2]
-        return g.reduce('w', name='out')
-
-    try:
-        theirs = _canon(build(_ref_cb.Graph).to_networkx())
-    except ValueError:
-        # Reference artifact: materializing a dim sliced to EMPTINESS crashes
-        # inside nx.compose_all (unspecified behavior, untested upstream).
-        # Our engine deliberately diverges: empty dims expand to zero
-        # instances — at 100 TB empty partitions are routine, not errors.
-        nxg = build(Graph).to_networkx()
-        assert all('dim_0' not in str(n) for n in nxg.nodes)
-        return
-    ours = _canon(build(Graph).to_networkx())
-    assert ours == theirs
-
-
-_TOPOLOGIES = {
-    'chain': [('v', 'm'), ('m', 'w'), ('u', 'w')],
-    'diamond': [('v', 'l'), ('v', 'r'), ('l', 'w'), ('r', 'w'), ('u', 'w')],
-    'wide': [('v', 'w'), ('u', 'w'), ('t', 'w')],
-}
-
-
-@given(
-    topo=st.sampled_from(sorted(_TOPOLOGIES)),
-    values=st.lists(st.integers(-9, 9), min_size=1, max_size=5),
-    labels_src=st.lists(st.sampled_from('pq'), min_size=5, max_size=5),
-    extra=st.one_of(st.none(), st.lists(st.integers(0, 3), min_size=1, max_size=2)),
-    op=_OPS,
-)
-@settings(max_examples=60, deadline=None)
-def test_hypothesis_differential_topologies(topo, values, labels_src, extra, op):
-    labels = labels_src[: len(values)]
-
-    def build(G):
-        g = G(nx.DiGraph(_TOPOLOGIES[topo]))
-        g = g.map(pd.DataFrame({'v': values, 'lab': labels}))
-        if extra is not None:
-            g = g.map({'u': extra})
-        if op == 'reduce_all':
-            return g.reduce('w', name='out')
-        if op == 'reduce_dim0':
-            return g.reduce('w', index='dim_0', name='out')
-        if op == 'groupby':
-            return g.groupby('lab').reduce('w', name='out')
-        g = g.by_position('dim_0')[0:2]
-        return g.reduce('w', name='out')
-
-    try:
-        theirs = _canon(build(_ref_cb.Graph).to_networkx())
-    except ValueError:
-        build(Graph).to_networkx()  # ours must not crash (empty-dim artifact)
-        return
-    ours = _canon(build(Graph).to_networkx())
-    assert ours == theirs
-
-
 def test_bloom_prefilter_never_loses_rows(spark):
     """Property: for random key sets, the Bloom-prefilter pipeline equals
     the plain semi-join — the filter can only pass false positives, and

@@ -1,17 +1,18 @@
-"""Scale-factor invariance for the SF-sensitive query classes.
+"""Oracle exactness of the query registry, checked on every CI run.
 
+Every registered query is checked against its DuckDB oracle at sf0.001.
 Exactness failures that only appear at larger row counts (decimal-cast
 rounding ties, double accumulation order, RANGE-frame boundaries at denser
-timestamps) never show up at sf0.001 — this suite re-proves oracle
-exactness for the trap-prone queries at sf0.01 AND sf0.1 on every CI run.
-The full registry sweep at all three SFs stays a per-round manual step
-(python tests/oracle_check.py <sf_dir>); this is the always-on subset.
+timestamps) never show up there, so the SF-trap classes below are
+re-proved at sf0.01 AND sf0.1 as well. Each case goes through
+``oracle_check.check_query``, the same function the manual sweep
+(``python tests/oracle_check.py <sf_dir>``) uses, so the two cannot
+disagree.
 """
 
 import importlib.util
 import os
 
-import duckdb
 import pytest
 
 from cyclebane_spark.queries import registry
@@ -87,31 +88,21 @@ QUERIES = (
 )
 
 SFS = ('/root/testdata/sf0.01', '/root/testdata/sf0.1')
+SF0001 = os.path.join(os.path.dirname(SFS[0]), 'sf0.001')
+
+# The SF-trap classes at the two larger scale factors, plus every
+# registered query at sf0.001.
+CASES = [
+    *((name, sf_dir) for name in QUERIES for sf_dir in SFS),
+    *((name, SF0001) for name in registry()),
+]
 
 
-@pytest.mark.parametrize('sf_dir', SFS, ids=['sf0.01', 'sf0.1'])
-@pytest.mark.parametrize('name', QUERIES)
+@pytest.mark.parametrize(
+    ('name', 'sf_dir'),
+    [pytest.param(name, sf_dir, id=f'{name}-{os.path.basename(sf_dir)}') for name, sf_dir in CASES],
+)
 def test_oracle_exact_across_sfs(spark, sf_dir, name):
-    q = registry()[name]
-    con = duckdb.connect()
-    for t in oracle_check.TABLES:
-        p = f'{sf_dir}/{t}.parquet'
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-    prev_tz = spark.conf.get('spark.sql.session.timeZone')
-    spark.conf.set('spark.sql.session.timeZone', 'UTC')
-    try:
-        ours = q.fn(spark, sf_dir).toPandas()
-    finally:
-        spark.conf.set('spark.sql.session.timeZone', prev_tz)
-    theirs = con.execute(q.oracle).df()
-    ocols, okinds, orows = oracle_check.canon(ours)
-    tcols, tkinds, trows = oracle_check.canon(theirs)
-    assert ocols == tcols
-    assert okinds == tkinds
-    assert len(orows) == len(trows)
-    for i, (ra, rb) in enumerate(zip(orows, trows)):
-        ok, exact = oracle_check.cells_equal(ra, rb)
-        assert ok and exact, f'{name}@{sf_dir} row {i}: {ra!r} != {rb!r}'
+    with oracle_check.connect(sf_dir) as con:
+        status, detail = oracle_check.check_query(spark, con, registry()[name], sf_dir)
+    assert status == 'ok', f'{name}@{sf_dir}: {status} {detail}'

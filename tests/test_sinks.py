@@ -177,6 +177,9 @@ def test_runtime_bloom_filter_prunes_fact_rows(spark, tmp_path):
     confs = {
         'spark.sql.optimizer.runtime.bloomFilter.enabled': 'true',
         'spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold': '10GB',
+        # a test-sized fact scan sits far below the 10 GB default
+        # application-side threshold, which can keep the filter off it
+        'spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold': '1b',
         'spark.sql.optimizer.runtimeFilter.number.threshold': '10',
         'spark.sql.autoBroadcastJoinThreshold': '-1',
     }

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""Standing per-round sf1 value-evidence gate (VERDICT r8 "Next round
-#1/#2" made standing): run the driver window + this round's changed
-queries — or the full registry with ``--full`` — against the sf1 dataset
-using the SPLIT PROTOCOL the round-9 pass validated:
+"""Standing sf1 value-evidence gate (VERDICT r8 "Next round #1/#2" made
+standing): run the full query registry against the sf1 dataset using the
+SPLIT PROTOCOL the round-9 pass validated:
 
 1. ``--checksum`` phase for every in-scope query. Cheap, engine-side,
    and SOUND for double-free outputs (count + exact sum + xor of a
@@ -20,7 +19,7 @@ scale-limit rows (`dedup_semantic_kmeans`, `dedup_tf_cosine_pairs`) are
 excluded, as in every recorded pass.
 
 Usage:
-    python tools/sf1_gate.py [--full] [sf1_dir]    # default /tmp/cb_sf1
+    python tools/sf1_gate.py [sf1_dir]    # default /tmp/cb_sf1
 (regenerate the dataset first if absent: python tools/gen_sf1.py)
 """
 
@@ -95,27 +94,18 @@ def _run(sf1_dir: str, names: list[str], checksum: bool) -> tuple[set, str]:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    full = '--full' in args
-    args = [a for a in args if a != '--full']
-    sf1_dir = args[0] if args else '/tmp/cb_sf1'
+    sf1_dir = sys.argv[1] if len(sys.argv) > 1 else '/tmp/cb_sf1'
     if not os.path.isdir(sf1_dir):
         print(f'sf1 dataset missing at {sf1_dir} — run: python tools/gen_sf1.py')
         return 2
 
-    from cyclebane_spark.queries import _CHANGED_THIS_ROUND, registry
+    from cyclebane_spark.queries import registry
 
-    reg = registry()
-    if full:
-        scope = [n for n in reg]
-    else:
-        scope = list(dict.fromkeys([*list(reg)[:50], *_CHANGED_THIS_ROUND]))
-    scope = [n for n in scope if n not in ORACLE_EXCLUDED]
+    scope = [n for n in registry() if n not in ORACLE_EXCLUDED]
     tol = [n for n in scope if n in TOLERANCE_OK]
     checksum_scope = [n for n in scope if n not in TOLERANCE_OK]
 
-    print(f'sf1 gate: {len(scope)} queries in scope '
-          f'({"full registry" if full else "window + changed"})')
+    print(f'sf1 gate: {len(scope)} queries in scope (full registry)')
     try:
         fails, _ = _run(sf1_dir, checksum_scope, checksum=True)
         print(f'checksum phase: {len(checksum_scope) - len(fails)} green, '
