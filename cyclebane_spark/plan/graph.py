@@ -14,6 +14,8 @@ architecture:
   on all shared dims, with groupby edges additionally restricted to group
   membership. This is equivalent to (but structured differently from) the
   reference's per-dim clone-and-compose (graph.py:367-441,595-611).
+  The expansion costs O(instances + instance edges): each compact edge is
+  a hash join of the two families on their shared dims.
 - Production execution never expands anything: see
   ``cyclebane_spark.operators.compile`` which turns node families into
   DataFrames (a family with dims d1..dk is a DataFrame keyed by columns
@@ -339,6 +341,10 @@ class Graph:
         Parity mode for tests/inspection: O(product of dim sizes) driver
         memory, exactly like the reference. Production execution goes through
         the Spark compiler instead.
+
+        Time is O(instances + instance edges): every family is enumerated
+        once, and each compact edge ``u -> v`` is a hash join on the dims the
+        two families share, so no pair of instances is ever compared.
         """
         import networkx as nx
 
@@ -366,15 +372,17 @@ class Graph:
             ]
 
         out = nx.DiGraph()
+        family: dict[Hashable, list[Hashable]] = {}
         for node in self._dag.nodes:
             attrs = self._dag.node_attrs(node)
-            for inst in instances(node):
+            family[node] = instances(node)
+            for inst in family[node]:
                 out.add_node(inst, **dict(attrs))
 
         for u, v in self._dag.edges:
             grouping = groupings.get(_base(v))
             u_axes, v_axes = axes_of(u), axes_of(v)
-            shared = set(u_axes) & set(v_axes)
+            shared = [d for d in v_axes if d in u_axes]
             if grouping is not None and grouping.inner_dim in set(_dims(u)):
                 # Group-membership edges: the predecessor's inner-dim values
                 # come from the grouping's member lists, not the catalog —
@@ -405,16 +413,19 @@ class Graph:
                 members = dict(
                     zip(grouping.labels, grouping.members, strict=True)
                 )
-                for vi in instances(v):
+                # A shared axis takes only the catalog values equal to the
+                # reduce instance's own; the free axes span the catalog.
+                equal = {d: _equal_values(catalog[d]) for d in shared}
+                for vi in family[v]:
                     vc = vi.index.to_dict()
+                    choices = [
+                        equal[d].get(vc[d], ()) if d in equal else catalog[d]
+                        for d in other_axes
+                    ]
                     for m in members[vc[grouping.group_dim]]:
-                        for combo in itertools.product(
-                            *(catalog[d] for d in other_axes)
-                        ):
+                        for combo in itertools.product(*choices):
                             uc = dict(zip(other_axes, combo, strict=True))
                             uc[inner] = m
-                            if any(uc[d] != vc[d] for d in shared):
-                                continue
                             ui = NodeName(
                                 _base(u),
                                 IndexValues(
@@ -426,12 +437,17 @@ class Graph:
                                 out.add_node(ui, **dict(u_attrs))
                             out.add_edge(ui, vi)
                 continue
-            for ui in instances(u):
-                uc = ui.index.to_dict() if isinstance(ui, NodeName) else {}
-                for vi in instances(v):
-                    vc = vi.index.to_dict() if isinstance(vi, NodeName) else {}
-                    if any(uc[d] != vc[d] for d in shared):
-                        continue
+            # Hash join on the shared dims: bucket v's instances by their
+            # shared values (in v's order), then give each u instance, in
+            # u's order, the edges to its bucket.
+            v_key, u_key = _shared_key(v_axes, shared), _shared_key(u_axes, shared)
+            buckets: dict[tuple, list[Hashable]] = {}
+            for vi in family[v]:
+                key = v_key(vi)
+                if all(x == x for x in key):  # NaN never matches
+                    buckets.setdefault(key, []).append(vi)
+            for ui in family[u]:
+                for vi in buckets.get(u_key(ui), ()):
                     out.add_edge(ui, vi)
 
         for node in out.nodes:
@@ -473,6 +489,26 @@ class GroupbyGraph:
             attrs=attrs,
             _extra_index_name=self._group_dim,
         )
+
+
+def _shared_key(axes: tuple[IndexName, ...], shared: list[IndexName]):
+    """Instance of a family with ``axes`` -> its values on ``shared``
+    (``()`` for every instance, unmapped ones included, if none are shared)."""
+    positions = [axes.index(d) for d in shared]
+    return lambda inst: tuple(inst.index.values[p] for p in positions)
+
+
+def _equal_values(values: list[IndexValue]) -> dict[IndexValue, list[IndexValue]]:
+    """Each value -> every value in ``values`` equal to it, in order.
+
+    NaN-like labels equal nothing, not even themselves, so they are left out
+    and never match: the same rule as comparing labels pairwise with ``!=``.
+    """
+    out: dict[IndexValue, list[IndexValue]] = {}
+    for x in values:
+        if x == x:
+            out.setdefault(x, []).append(x)
+    return out
 
 
 def _as_mapping(node_values: Any) -> Mapping[Hashable, Any]:

@@ -23,6 +23,7 @@ Only label columns backed by pandas Series (or SparkColumn) support grouping.
 from __future__ import annotations
 
 from collections.abc import Hashable, Iterable, Mapping, Sequence
+from functools import cached_property
 from typing import Any
 
 IndexName = Hashable
@@ -138,6 +139,25 @@ def _seq_equal(a: Iterable[Any], b: Iterable[Any]) -> bool:
     return all(x == y for x, y in zip(la, lb, strict=True))
 
 
+def _first_positions(labels: Iterable[IndexValue]) -> dict[IndexValue, int]:
+    """Label -> position of its first occurrence, as ``list.index`` finds it."""
+    out: dict[IndexValue, int] = {}
+    for pos, label in enumerate(labels):
+        out.setdefault(label, pos)
+    return out
+
+
+def _position(
+    positions: dict[IndexValue, int],
+    labels: Iterable[IndexValue],
+    value: IndexValue,
+) -> int:
+    """Position of ``value`` in ``labels`` through the ``positions`` table;
+    a label missing from it goes to ``list.index``, which raises ValueError."""
+    pos = positions.get(value)
+    return pos if pos is not None else list(labels).index(value)
+
+
 class SeqArray(DimArray):
     """A plain Python sequence: one dim, positional index."""
 
@@ -160,9 +180,13 @@ class SeqArray(DimArray):
     def shape(self) -> tuple[int, ...]:
         return (len(self._values),)
 
+    @cached_property
+    def _positions(self) -> dict[IndexValue, int]:
+        return _first_positions(self._index)
+
     def at(self, coords: Mapping[IndexName, IndexValue]) -> Any:
         (value,) = coords.values()
-        return self._values[list(self._index).index(value)]
+        return self._values[_position(self._positions, self._index, value)]
 
     def islice(self, key: Mapping[IndexName, slice]) -> 'SeqArray':
         (sl,) = key.values()
@@ -216,9 +240,14 @@ class NdArray(DimArray):
     def shape(self) -> tuple[int, ...]:
         return self._array.shape
 
+    @cached_property
+    def _positions(self) -> dict[IndexName, dict[IndexValue, int]]:
+        return {d: _first_positions(labels) for d, labels in self._coords.items()}
+
     def at(self, coords: Mapping[IndexName, IndexValue]) -> Any:
         pos = tuple(
-            list(self._coords[d]).index(coords[d]) for d in self._coords
+            _position(self._positions[d], labels, coords[d])
+            for d, labels in self._coords.items()
         )
         return self._array[pos]
 

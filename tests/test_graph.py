@@ -564,3 +564,66 @@ def test_node_attrs_preserved_in_map_with_custom_value_attr():
     result = mapped.to_networkx(value_attr='myvalue')
     assert result.nodes[idx('a', 0)] == {'attr': 11, 'myvalue': 1}
     assert result.nodes[idx('b', 2)] == {'attr': 22}
+
+
+# -- expansion cost ----------------------------------------------------------
+
+
+def test_expansion_is_linear_in_instances_and_edges():
+    # A 100x50 sweep: matching every pair of instances of the two
+    # 5,000-instance families took about 3 minutes on a 4-vCPU VM; the hash
+    # join on shared dims takes well under a second.
+    import time
+
+    g = (
+        cb.Graph(nx.DiGraph([('x', 'f'), ('y', 'f'), ('f', 'g')]))
+        .map({'x': list(range(100))})
+        .map({'y': list(range(50))})
+        .reduce('g', index='dim_1', name='r')
+        .reduce('r', name='s')
+    )
+    start = time.perf_counter()
+    result = g.to_networkx()
+    elapsed = time.perf_counter() - start
+    assert (result.number_of_nodes(), result.number_of_edges()) == (10_251, 20_100)
+    assert elapsed < 10, f'expansion took {elapsed:.1f}s'
+
+
+def test_attached_values_of_large_list_and_2d_numpy_are_positional():
+    values = [3 * i + 1 for i in range(20_000)]
+    result = cb.Graph(chain('a', 'b')).map({'a': values}).to_networkx()
+    assert [result.nodes[idx('a', i)]['value'] for i in range(20_000)] == values
+
+    array = np.arange(300 * 70).reshape(300, 70) * 2
+    result = cb.Graph(chain('a', 'b')).map({'a': array}).to_networkx()
+    for i, j in [(0, 0), (1, 0), (0, 1), (299, 69), (150, 33)]:
+        assert result.nodes[idx('a', i, j)]['value'] == array[i, j]
+
+
+def test_value_lookup_takes_first_of_duplicate_labels():
+    from cyclebane_spark.sources.arrays import NdArray, SeqArray
+
+    seq = SeqArray([10, 20, 30], index=['p', 'q', 'p'])
+    assert [seq.at({'dim_0': label}) for label in 'pqp'] == [10, 20, 10]
+    nd = NdArray(np.arange(6).reshape(3, 2), coords={'r': ['p', 'q', 'p'], 'c': [0, 1]})
+    assert nd.at({'r': 'p', 'c': 1}) == 1
+    with pytest.raises(ValueError):
+        seq.at({'dim_0': 'z'})
+
+
+def test_nan_label_never_joins_on_shared_dim():
+    # Labels are matched by equality, and NaN equals nothing, so the NaN
+    # instances of a shared dim get no edges between families; reducing the
+    # dim away still fans every instance in.
+    s = pd.Series([1, 2, 3], index=pd.Index([0.0, np.nan, 2.0], name='i'))
+    g = cb.Graph(chain('x', 'f', 'g')).map({'x': s}).reduce('g', name='s')
+    edges = sorted(f'{u}->{v}' for u, v in g.to_networkx().edges)
+    assert edges == [
+        'f(i=0.0)->g(i=0.0)',
+        'f(i=2.0)->g(i=2.0)',
+        'g(i=0.0)->s',
+        'g(i=2.0)->s',
+        'g(i=nan)->s',
+        'x(i=0.0)->f(i=0.0)',
+        'x(i=2.0)->f(i=2.0)',
+    ]

@@ -1,7 +1,9 @@
 """Differential tests: run the SAME workflow through the reference cyclebane
 library and through cyclebane_spark's plan layer, canonicalize both
 ``to_networkx()`` outputs, and require equality. The module is skipped when
-the reference library is not importable.
+the reference library is not importable; ``test_expand_golden.py`` then
+guards the same named and seeded scenarios (``expand_scenarios``) through
+their frozen expansions.
 
 This is the strongest parity check we have: node sets, edge sets, attrs and
 attached values must agree exactly — including for randomized workflows.
@@ -22,16 +24,14 @@ sys.path.insert(0, '/root/reference/src')
 ref_cb = pytest.importorskip('cyclebane')
 
 from cyclebane_spark import Graph  # noqa: E402
-
-
-def canon(nxg):
-    nodes = sorted(str(n) for n in nxg.nodes)
-    edges = sorted((str(a), str(b)) for a, b in nxg.edges)
-    attrs = sorted(
-        (str(n), sorted((k, str(v)) for k, v in d.items()))
-        for n, d in nxg.nodes(data=True)
-    )
-    return nodes, edges, attrs
+from expand_scenarios import (  # noqa: E402
+    NAMED,
+    SEEDS,
+    canon,
+    random_groupby_workflow,
+    random_workflow,
+    rng,
+)
 
 
 def check(build):
@@ -51,232 +51,9 @@ def check_raises(build, exc):
 # -- deterministic scenarios -------------------------------------------------
 
 
-def test_chained_maps_orthogonal_dims():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'c'), ('b', 'c'), ('c', 'd')]))
-        g = g.map({'a': [1, 2]})
-        g = g.map({'b': [10, 20, 30]})
-        return g.reduce('d', name='total')
-
-    check(build)
-
-
-def test_joint_map_dataframe_shares_dim():
-    def build(G):
-        g = G(nx.DiGraph([('x', 'z'), ('y', 'z')]))
-        g = g.map(pd.DataFrame({'x': [1, 2, 3], 'y': [4, 5, 6]}))
-        return g.reduce('z', name='total')
-
-    check(build)
-
-
-def test_numpy_2d_map_and_axis_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': np.arange(6).reshape(2, 3)})
-        return g.reduce('b', axis=1, name='r')
-
-    check(build)
-
-
-def test_reduce_axis_is_node_relative_after_second_map():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('c', 'b')]))
-        g = g.map({'a': [1, 2]})
-        g = g.map({'c': [5, 6, 7]})
-        return g.reduce('b', axis=0, name='r')
-
-    check(build)
-
-
-def test_reduce_index_keeps_other_dims():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': np.arange(4).reshape(2, 2)})
-        return g.reduce('b', index='dim_1', name='r')
-
-    check(build)
-
-
-def test_chained_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': np.arange(6).reshape(2, 3)})
-        g = g.reduce('b', index='dim_0', name='r0')
-        return g.reduce('r0', index='dim_1', name='r1')
-
-    check(build)
-
-
-def test_groupby_reduce_with_pandas_label():
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w')]))
-        df = pd.DataFrame({'v': [1, 2, 3, 4], 'lab': ['p', 'q', 'p', 'q']})
-        g = g.map(df)
-        return g.groupby('lab').reduce('w', name='agg')
-
-    check(build)
-
-
-def test_groupby_reduce_then_regular_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w')]))
-        df = pd.DataFrame({'v': [1, 2, 3, 4], 'lab': ['p', 'q', 'p', 'q']})
-        g = g.map(df)
-        g = g.groupby('lab').reduce('w', name='agg')
-        return g.reduce('agg', name='final')
-
-    check(build)
-
-
-def test_2d_node_groupby():
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w'), ('u', 'w')]))
-        df = pd.DataFrame({'v': [1, 2, 3, 4], 'lab': ['p', 'q', 'p', 'q']})
-        g = g.map(df)
-        g = g.map({'u': [7, 8]})
-        return g.groupby('lab').reduce('w', name='agg')
-
-    check(build)
-
-
-def test_2d_regular_reduce_then_groupby_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'c'), ('b', 'c')]))
-        g = g.map({'a': [1, 2, 3]}).map({'b': [10, 20]})
-        g = g.reduce('c', name='reduced_c', index='dim_1')
-        g = g.map(
-            pd.DataFrame({'param': ['x', 'x', 'y']}).set_index(
-                pd.RangeIndex(3, name='dim_0')
-            )
-        )
-        return g.groupby('param').reduce('reduced_c', name='final')
-
-    check(build)
-
-
-def test_2d_groupby_then_regular_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'c'), ('b', 'c')]))
-        df = pd.DataFrame({'a': [1, 2, 3], 'param': ['x', 'x', 'y']})
-        g = g.map(df).map({'b': [10, 20]})
-        g = g.groupby('param').reduce('c', name='grouped_c')
-        return g.reduce('grouped_c', name='final', index='dim_1')
-
-    check(build)
-
-
-def test_chained_groupby():
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w')]))
-        df = pd.DataFrame(
-            {
-                'v': [1, 2, 3, 4],
-                'fine': ['a', 'a', 'b', 'b'],
-            }
-        )
-        g = g.map(df)
-        g = g.groupby('fine').reduce('w', name='per_fine')
-        g = g.map(
-            pd.DataFrame({'coarse': ['g1', 'g2']}).set_index(
-                pd.Index(['a', 'b'], name='fine')
-            )
-        )
-        return g.groupby('coarse').reduce('per_fine', name='per_coarse')
-
-    check(build)
-
-
-def test_slice_inner_dim_after_groupby_keeps_grouped_fanin():
-    """Grouping snapshots membership at groupby() time: slicing the inner
-    dim afterwards must not restrict grouped fan-in (reference
-    graph.py:426-441 semantics)."""
-
-    def build(G):
-        g = G(nx.DiGraph([('v', 'w')]))
-        df = pd.DataFrame({'v': [1, 2, 3, 4], 'lab': ['p', 'q', 'p', 'q']})
-        g = g.map(df)
-        g = g.groupby('lab').reduce('w', name='agg')
-        return g.by_position('dim_0')[0:2]
-
-    check(build)
-
-
-def test_positional_slice_then_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': [1, 2, 3, 4, 5]})
-        g = g.by_position('dim_0')[1:4]
-        return g.reduce('b', name='r')
-
-    check(build)
-
-
-def test_getitem_branch():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c'), ('x', 'c')]))
-        g = g.map({'a': [1, 2]})
-        return g['b']
-
-    check(build)
-
-
-def test_setitem_grafts_branch():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c')]))
-        g = g.map({'a': [1, 2]})
-        other = G(nx.DiGraph([('p', 'b')]))
-        other = other.map({'p': [5, 6]})
-        g['b'] = other
-        return g
-
-    check(build)
-
-
-def test_delitem_prunes_exclusive_ancestors():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c'), ('x', 'c')]))
-        del g['b']
-        return g
-
-    check(build)
-
-
-def test_attrs_preserved_through_map_and_reduce():
-    def build(G):
-        ng = nx.DiGraph([('a', 'b')])
-        ng.nodes['b']['kind'] = 'transform'
-        g = G(ng)
-        g = g.map({'a': [1, 2]})
-        return g.reduce('b', name='r', attrs={'kind': 'agg'})
-
-    check(build)
-
-
-def test_type_object_node_keys():
-    """Node names may be arbitrary Hashables — the reference's own tests use
-    Python ``type`` objects as keys (reference tests/graph_test.py:237-258)."""
-
-    class Raw: ...
-
-    class Clean: ...
-
-    class Result: ...
-
-    def build(G):
-        g = G(nx.DiGraph([(Raw, Clean), (Clean, Result)]))
-        g = g.map({Raw: [1, 2, 3]})
-        return g.reduce(Result, name='total')
-
-    check(build)
-
-
-def test_empty_map_is_noop():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        return g.map({})
-
-    check(build)
+@pytest.mark.parametrize('name', list(NAMED))
+def test_named_scenario_matches_reference(name):
+    check(NAMED[name])
 
 
 def test_indices_and_index_names_parity():
@@ -292,40 +69,6 @@ def test_indices_and_index_names_parity():
     assert {str(k): [str(v) for v in vs] for k, vs in ours.indices.items()} == {
         str(k): [str(v) for v in vs] for k, vs in theirs.indices.items()
     }
-
-
-def test_setitem_mapped_branch_with_mapped_graft_same_dim():
-    """Graft a mapped graph onto a mapped branch: both sinks are mapped, the
-    replacement re-keys the graft's values to the branch name and the dims
-    must line up (reference graph.py:494-535)."""
-
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c')]))
-        g = g.map({'a': [1, 2]})
-        other = G(nx.DiGraph([('p', 'q'), ('q', 'b')]))
-        other = other.map({'p': [5, 6]})
-        g['b'] = other
-        return g
-
-    check(build)
-
-
-def test_numpy_3d_map_middle_axis_reduce():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': np.arange(24).reshape(2, 3, 4)})
-        return g.reduce('b', axis=1, name='r')
-
-    check(build)
-
-
-def test_copy_shares_values_and_structure():
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b')]))
-        g = g.map({'a': [1, 2]})
-        return g.copy().reduce('b', name='r')
-
-    check(build)
 
 
 # -- error-surface parity ----------------------------------------------------
@@ -419,17 +162,6 @@ def test_setitem_mapped_graft_conflicting_dims_raises():
     check_raises(build, ValueError)
 
 
-def test_reduce_falsy_key_falls_back_to_sink():
-    # key=0 is falsy: the reference's `key or _get_unique_sink(...)` ignores
-    # the literal node 0 and reduces the sink instead — bug-for-bug parity.
-    def build(G):
-        g = G(nx.DiGraph([(0, 'b')]))
-        g = g.map({0: [1, 2]})
-        return g.reduce(0, name='r')
-
-    check(build)
-
-
 def test_multi_index_spark_column_parity_expansion(spark):
     # A dense 2-index SparkColumn must expand to the SAME instance DAG as
     # the reference's 2-D numpy map (dims named dim_0/dim_1, range coords).
@@ -499,131 +231,14 @@ def test_delete_mapped_node_raises():
 # -- randomized differential -------------------------------------------------
 
 
-def _random_workflow(G, rng: np.random.Generator):
-    """A random-but-valid workflow applied identically to either library."""
-    n_roots = int(rng.integers(1, 4))
-    roots = [f'r{i}' for i in range(n_roots)]
-    edges = [(r, 'mid') for r in roots] + [('mid', 'sink')]
-    g = G(nx.DiGraph(edges))
-    # map a random subset of roots, possibly jointly
-    k = int(rng.integers(1, n_roots + 1))
-    chosen = list(rng.choice(roots, size=k, replace=False))
-    if rng.random() < 0.5 and k > 1:
-        # joint map: one DataFrame, shared dim
-        n = int(rng.integers(2, 5))
-        g = g.map(
-            pd.DataFrame({c: rng.integers(0, 100, n).tolist() for c in chosen})
-        )
-    else:
-        for c in chosen:
-            if rng.random() < 0.3:
-                arr = rng.integers(0, 9, (2, int(rng.integers(2, 4))))
-                g = g.map({c: arr})
-            else:
-                g = g.map({c: rng.integers(0, 100, int(rng.integers(2, 5))).tolist()})
-    # maybe slice one dim positionally
-    dims = list(g.indices) if hasattr(g, 'indices') else []
-    if dims and rng.random() < 0.4:
-        g = g.by_position(dims[0])[0:2]
-    # maybe exercise branch surgery: project out 'mid' and graft it back
-    if rng.random() < 0.3:
-        branch = g['mid']
-        g['mid'] = branch
-    # reduce the sink over a random choice
-    mode = rng.random()
-    sink_dims = [d for d in dims]
-    if mode < 0.4 and sink_dims:
-        g = g.reduce('sink', index=sink_dims[int(rng.integers(len(sink_dims)))], name='out')
-    elif mode < 0.6 and sink_dims:
-        g = g.reduce('sink', axis=0, name='out')
-    else:
-        g = g.reduce('sink', name='out')
-    return g
-
-
-def _random_groupby_workflow(G, rng: np.random.Generator):
-    """Random map + groupby-reduce workflows (optionally 2-D, sliced)."""
-    n = int(rng.integers(2, 8))
-    labels = [str(x) for x in rng.integers(0, 3, n)]
-    g = G(nx.DiGraph([('v', 'w'), ('u', 'w')]))
-    g = g.map(
-        pd.DataFrame({'v': rng.integers(0, 100, n).tolist(), 'lab': labels})
-    )
-    if rng.random() < 0.5:
-        g = g.map({'u': rng.integers(0, 9, int(rng.integers(1, 4))).tolist()})
-    g = g.groupby('lab').reduce('w', name='agg')
-    if rng.random() < 0.3:
-        g = g.by_position('dim_0')[0 : int(rng.integers(1, n + 1))]
-    if rng.random() < 0.5:
-        g = g.reduce('agg', name='final')
-    return g
-
-
-@pytest.mark.parametrize("seed", range(100))
+@pytest.mark.parametrize("seed", SEEDS)
 def test_randomized_groupby_workflows_match_reference(seed):
-    ours = canon(
-        _random_groupby_workflow(
-            Graph, np.random.Generator(np.random.PCG64(seed))
-        ).to_networkx()
-    )
-    theirs = canon(
-        _random_groupby_workflow(
-            ref_cb.Graph, np.random.Generator(np.random.PCG64(seed))
-        ).to_networkx()
-    )
-    assert ours == theirs
+    check(lambda G: random_groupby_workflow(G, rng(seed)))
 
 
-@pytest.mark.parametrize("seed", range(100))
+@pytest.mark.parametrize("seed", SEEDS)
 def test_randomized_workflows_match_reference(seed):
-    ours = canon(
-        _random_workflow(Graph, np.random.Generator(np.random.PCG64(seed))).to_networkx()
-    )
-    theirs = canon(
-        _random_workflow(
-            ref_cb.Graph, np.random.Generator(np.random.PCG64(seed))
-        ).to_networkx()
-    )
-    assert ours == theirs
-
-
-def test_series_indexed_by_existing_dim_joins_on_it():
-    """A second map whose pandas index IS an existing dim joins on that dim
-    instead of adding a new one (reference graph_test.py:645-659)."""
-
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('c', 'b')]))
-        g = g.map({'a': [10, 20, 30]})  # creates dim_0
-        s = pd.Series([5, 6, 7], index=pd.RangeIndex(3, name='dim_0'), name='c')
-        g = g.map({'c': s})  # keyed by the EXISTING dim
-        return g.reduce('b', name='out')
-
-    check(build)
-
-
-def test_setitem_preserves_sink_node_values():
-    """Grafting a branch re-keys the replacement's sink values onto the
-    branch name (reference graph_test.py:699 semantics)."""
-
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c')]))
-        g = g.map({'a': [1, 2, 3]})
-        g['b'] = g['a']  # replacement sink 'a' is mapped; values re-key to 'b'
-        return g
-
-    check(build)
-
-
-def test_getitem_accepts_pre_map_original_name():
-    """Branch selection resolves original (pre-map) node names
-    (_from_orig_key, reference graph.py:343-362)."""
-
-    def build(G):
-        g = G(nx.DiGraph([('a', 'b'), ('b', 'c')]))
-        g = g.map({'a': [1, 2, 3]})
-        return g['b']  # 'b' is now MappedNode('b', ('dim_0',))
-
-    check(build)
+    check(lambda G: random_workflow(G, rng(seed)))
 
 
 # -- hypothesis-driven differential vs the reference library -----------------
