@@ -1,8 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark headline queries; prints ONE JSON line.
+"""Benchmark registry queries; prints ONE JSON line.
+
+Usage: python bench.py [<query> ...]
+With no arguments it times the headline queries (metric
+``headline_query_wall_time``); given query names it times exactly those,
+in that order (metric ``query_wall_time``).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the machine's cpu count).
 """
 
 from __future__ import annotations
@@ -21,15 +26,23 @@ def main() -> None:
     # the number that says whether the box was otherwise busy.
     load_start = os.getloadavg()[0]
     from cyclebane_spark.functions import bench_session
-    from cyclebane_spark.queries import headline_queries
+    from cyclebane_spark.queries import headline_queries, queries
+
+    names = sys.argv[1:]
+    if names:
+        known = queries()
+        missing = [n for n in names if n not in known]
+        if missing:
+            raise SystemExit(f'unknown queries: {missing}')
+        qs = {n: known[n] for n in names}
+    else:
+        qs = headline_queries()
 
     sf_dir = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
     # session config (incl. the pinned default broadcast threshold and its
     # rationale) lives in ONE place: cyclebane_spark.functions.bench_session
     spark = bench_session('cyclebane-spark-bench')
     spark.sparkContext.setLogLevel('ERROR')
-
-    qs = headline_queries()
 
     # the shared consumption action (see its docstring for why count()
     # under-measures and how map-typed columns are handled)
@@ -68,7 +81,9 @@ def main() -> None:
     print(
         json.dumps(
             {
-                'metric': 'headline_query_wall_time',
+                'metric': (
+                    'query_wall_time' if names else 'headline_query_wall_time'
+                ),
                 # round 6 harness fix: queries are consumed via an
                 # all-columns checksum, not count() (which let Catalyst
                 # prune final aggregate arithmetic) — totals step UP vs

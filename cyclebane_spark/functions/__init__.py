@@ -51,29 +51,23 @@ def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles in document order, duplicates kept:
     array<string>. The ONE canonical gram definition — :func:`shingles`
     (Jaccard semantics) and the MinHash signature path (min-fold, which is
-    duplicate-insensitive) both build on it.
-
-    Texts with fewer than ``n`` tokens yield an empty array (matching SQL
-    ``range(0, size - n + 1)``, which is empty when size < n); without the
-    guard ``sequence(0, size - n)`` would DESCEND and emit bogus partial
-    grams.
+    duplicate-insensitive) both build on it. It is
+    :func:`word_ngrams_of` over :func:`tokens`.
     """
-    toks = tokens(text)
-    seq = F.sequence(F.lit(0), F.size(toks) - n)
-    gram = lambda i: F.concat_ws(' ', *[F.get(toks, i + k) for k in range(n)])  # noqa: E731
-    return F.when(
-        F.size(toks) >= n, F.transform(seq, gram)
-    ).otherwise(F.array().cast('array<string>'))
+    return word_ngrams_of(tokens(text), n)
 
 
 def word_ngrams_of(toks: Column | str, n: int) -> Column:
     """Word n-grams of an ALREADY-TOKENIZED array column, duplicates
-    kept: array<string>. The array-input form of the :func:`word_ngrams`
-    definition (same expression tree, same short-array guard), exposed
-    for tokenize-once pipelines that materialize the token array behind
-    a repartition barrier before building grams — hand-copying the
-    guarded builder at those call sites is how the descending-sequence
-    footgun (see :func:`word_ngrams`) comes back."""
+    kept: array<string>. Tokenize-once pipelines that materialize the
+    token array behind a repartition barrier build their grams here
+    rather than hand-copying the guarded builder.
+
+    Arrays with fewer than ``n`` tokens yield an empty array (matching SQL
+    ``range(0, size - n + 1)``, which is empty when size < n); without the
+    guard ``sequence(0, size - n)`` would DESCEND and emit bogus partial
+    grams.
+    """
     toks = _col(toks)
     seq = F.sequence(F.lit(0), F.size(toks) - n)
     gram = lambda i: F.concat_ws(' ', *[F.get(toks, i + k) for k in range(n)])  # noqa: E731
@@ -230,24 +224,29 @@ def _contains_map(dt) -> bool:
 
 
 def bench_session(app_name: str):
-    """The ONE bench SparkSession builder shared by bench.py,
-    tools/flagship_bench.py and tools/marginal_bench.py, so the three
-    harnesses can never time under different join strategies.
+    """The one SparkSession factory: every Spark session in the repo
+    starts here, so the plans the tests pin are the plans the bench
+    times. Callers: ``bench.py``, ``perfbench/worker.py``, the ``spark``
+    fixture in ``tests/conftest.py``, ``tests/oracle_check.py``, and the
+    tools ``dump_plan``, ``marginal_bench``, ``sf1_twin_evidence``,
+    ``gen_sf1``, ``gen_skew_bench``, ``gen_chain_bench``,
+    ``gen_layout_bench`` and ``gen_rank_skew_bench``.
 
-    Pinned to Spark's DEFAULT 10MB autoBroadcastJoinThreshold: the
-    round-1 64MB override made Catalyst broadcast multi-million-row
-    FILTERED FACT sides at sf1 (q3 built a hash table from the
-    shipdate-filtered lineitem) — measured 2.5-4x slower than the shuffle
-    joins it displaced, while every headliner improved or tied at sf0.1
-    under the default (SCALE.md round-8 plan note). Dimension broadcasts
-    are explicit F.broadcast calls and unaffected.
+    ``local[cpus]`` with one shuffle partition per core, AQE on, the
+    session time zone pinned to UTC, and Spark's DEFAULT 10MB
+    autoBroadcastJoinThreshold: a 64MB override made Catalyst broadcast
+    multi-million-row FILTERED FACT sides at sf1 (q3 built a hash table
+    from the shipdate-filtered lineitem) — measured 2.5-4x slower than the
+    shuffle joins it displaced, while every headliner improved or tied at
+    sf0.1 under the default (SCALE.md). Dimension broadcasts are explicit
+    F.broadcast calls and unaffected.
 
-    Env: SPARK_GRAFT_CPUS (default 32)."""
+    Env: SPARK_GRAFT_CPUS (default ``os.cpu_count()``)."""
     import os
 
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get('SPARK_GRAFT_CPUS', '32')
+    cpus = os.environ.get('SPARK_GRAFT_CPUS', str(os.cpu_count()))
     return (
         SparkSession.builder.master(f'local[{cpus}]')
         .config('spark.sql.shuffle.partitions', cpus)
@@ -265,7 +264,7 @@ def bench_session(app_name: str):
 def checksum_consume(df) -> None:
     """Force FULL evaluation of every output column: fold an all-columns
     xxhash64 with bit_xor. The shared consumption action of bench.py and
-    tools/flagship_bench.py — a bare count() lets Catalyst PRUNE
+    tools/marginal_bench.py — a bare count() lets Catalyst PRUNE
     expressions no downstream operator demands (the round-6 harness fix;
     measured: q1 0.21s -> 0.98s, param sweep 0.40s -> 1.55s at sf0.1 once
     forced). The hash fold runs over the FINAL rows only, so its own cost

@@ -138,23 +138,6 @@ def _minhash_oracle() -> str:
     return _minhash_ctes() + '\n    SELECT doc_a, doc_b FROM pairs'
 
 
-def spread(df, *cols):
-    """Repartition before heavy per-row compute — scale-adaptively.
-
-    The test tables are single parquet files -> one input split; without
-    this every md5/shingle evaluation runs on one core. r11 optimization:
-    the unconditional form kept its full-corpus hash exchange at 100 TB
-    too, where inputs already arrive as many splits and the exchange is
-    NOT "no-op-cost" — it moves every byte once for nothing (guide §2.4:
-    remove shuffles outright). Delegates to
-    :func:`cyclebane_spark.tables.spread_small`, which repartitions only
-    small few-file inputs and returns the plan untouched otherwise (the
-    synthesized 32-part sf1 tables now take the untouched path — measured
-    equal-or-faster there, see OPTIMIZATION_r11.md).
-    """
-    return spread_small(df, *cols)
-
-
 def _minhash_bands(docs):
     """(doc_id, band_id, bh) LSH band rows for a documents DataFrame.
 
@@ -383,7 +366,7 @@ def _minhash_docs(spark, sf_dir):
     # below n, matching the oracle's range()) means none exist. A filter on
     # the shingle array would also get pushed below the repartition —
     # recomputing every shingle inside the single pre-shuffle scan task.
-    return spread(table(spark, sf_dir, 'documents'), 'doc_id')
+    return spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
 
 
 def _minhash_pairs(spark, sf_dir):
@@ -644,7 +627,7 @@ def dedup_simhash(spark, sf_dir):
     bits. Near-dup docs land in equal or near-equal buckets. Both engines evaluate
     the same generated expressions, so signatures match exactly.
     """
-    docs = spread(table(spark, sf_dir, 'documents'), 'doc_id')
+    docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
     toks = F.split(F.trim(F.col('text')), r'\s+')
     tok = docs.select(
         'doc_id', F.explode(F.array_distinct(toks)).alias('tok')
@@ -689,7 +672,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    docs = spread(table(spark, sf_dir, 'documents'), 'doc_id')
+    docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
     sh = docs.select('doc_id', F.explode(_spark_shingles(3)).alias('s'))
     shn = sh.withColumn(
         'n', F.count(F.lit(1)).over(Window.partitionBy('doc_id'))
@@ -1252,7 +1235,7 @@ def dedup_jaccard_prefix_filter(spark, sf_dir):
     re-aggregating the token stream. Two token-stream shuffles (global df,
     per-doc rank) + one candidate shuffle, all key-uniform.
     """
-    docs = spread(table(spark, sf_dir, 'documents'), 'doc_id')
+    docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
     return _prefix_filter_pairs(docs, t=0.5)
 
 
@@ -1936,7 +1919,7 @@ def dedup_containment_pairs(spark, sf_dir):
     """Directed containment pairs (sub -> super) with C >= 0.6 over
     distinct 3-gram sets; prefix-filtered probe, full index, exact
     verification (see the module note)."""
-    docs = spread(table(spark, sf_dir, 'documents'), 'doc_id')
+    docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
     return _containment_pairs(docs, t=_CONTAIN_T)
 
 
@@ -1947,39 +1930,17 @@ def _fits_broadcast(df) -> bool:
     disabled broadcasting (threshold <= 0) or the estimate exceeds it —
     callers then pin a shuffle-HASH join instead (never sort-merge; see
     the containment-verify note). Estimate errors only flip WHICH exact
-    plan runs, never the answer — and so does any failure here: the conf
-    is parsed by Spark's own byte-string parser (the exact code the
-    threshold conf itself goes through) with a regex fallback, and a
-    stats-probe failure (private-API drift across Spark upgrades) falls
-    back to the always-safe shuffle-hash branch instead of surfacing as a
+    plan runs, never the answer — and so does any failure here: the
+    threshold is read through Spark's own typed conf getter (the parse
+    the optimizer itself uses), and any failure of it or of the stats
+    probe (private-API drift across Spark upgrades) falls back to the
+    always-safe shuffle-hash branch instead of surfacing as a
     query-construction exception."""
-    import re
-
-    spark = df.sparkSession
-    raw = str(
-        spark.conf.get('spark.sql.autoBroadcastJoinThreshold', '10485760')
-    ).strip()
     try:
-        threshold = int(
-            spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(  # noqa: E501
-                raw
-            )
-        )
-    except Exception:
-        m = re.fullmatch(r'(-?\d+)\s*([kmgt]?b?)', raw, re.IGNORECASE)
-        mult = {
-            '': 1, 'b': 1,
-            'k': 1 << 10, 'kb': 1 << 10,
-            'm': 1 << 20, 'mb': 1 << 20,
-            'g': 1 << 30, 'gb': 1 << 30,
-            't': 1 << 40, 'tb': 1 << 40,
-        }
-        if not m:
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        threshold = int(conf.autoBroadcastJoinThreshold())
+        if threshold <= 0:
             return False
-        threshold = int(m.group(1)) * mult[m.group(2).lower()]
-    if threshold <= 0:
-        return False
-    try:
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )

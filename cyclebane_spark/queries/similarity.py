@@ -2073,11 +2073,11 @@ def _occupancy_drift(corp, batch, checkpoint: bool = True):
     ``cells`` (at most K + novel-cell rows) is consumed by TWO jobs — the
     broadcast totals and the final aggregate — and in the registered gate
     each consumption would re-execute the full k-means assignment subtree
-    above it (two WindowGroupLimit top-1 passes per re-execution; r6
-    PLANS.md showed the subtree three times). An eager ``localCheckpoint``
-    materializes the K-row histogram ONCE and both jobs read the
-    checkpointed rows. ``checkpoint=False`` keeps the raw composed plan
-    for the plan-shape pin tests."""
+    above it (two WindowGroupLimit top-1 passes per re-execution; the
+    uncheckpointed plan showed the subtree three times). An eager
+    ``localCheckpoint`` materializes the K-row histogram ONCE and both
+    jobs read the checkpointed rows. ``checkpoint=False`` keeps the raw
+    composed plan for the plan-shape pin tests."""
     cells = (
         corp.join(batch, 'cl', 'full_outer')
         .select(
@@ -2178,7 +2178,7 @@ def ann_ivf_drift_gate(spark, sf_dir):
     assignment plus the two K-row histogram aggregations. The histograms
     are localCheckpoint'ed inside :func:`_occupancy_drift`, so the whole
     training/assignment subtree executes exactly once per call instead of
-    once per consuming job (r6 PLANS.md showed it three times)."""
+    once per consuming job (the uncheckpointed plan showed it three times)."""
     return _occupancy_drift(*_drift_gate_histograms(spark, sf_dir))
 
 

@@ -23,13 +23,6 @@ TABLE_NAMES = (
     'embeddings',
 )
 
-# Tables small enough to broadcast in joins against the fact tables even at
-# large scale factors (region/nation are fixed-size; supplier/customer/part
-# grow with SF but stay orders of magnitude below lineitem — at 100 TB these
-# would be bucketed instead, so the join helpers take an explicit hint).
-SMALL_DIMS = frozenset({'region', 'nation'})
-
-
 # Resolved-relation cache, the local analog of a metastore's table cache:
 # ``spark.read.parquet`` lists files and reads footers on every call, a
 # driver-side round-trip that would otherwise be paid per query construction.

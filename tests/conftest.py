@@ -5,19 +5,9 @@ import pytest
 
 @pytest.fixture(scope='session')
 def spark():
-    from pyspark.sql import SparkSession
+    from cyclebane_spark.functions import bench_session
 
-    cpus = os.environ.get('SPARK_GRAFT_CPUS', '4')
-    session = (
-        SparkSession.builder.master(f'local[{cpus}]')
-        .appName('cyclebane-spark-tests')
-        .config('spark.sql.shuffle.partitions', '8')
-        .config('spark.sql.adaptive.enabled', 'true')
-        .config('spark.ui.enabled', 'false')
-        .config('spark.driver.memory', '4g')
-        .getOrCreate()
-    )
-    yield session
+    yield bench_session('cyclebane-spark-tests')
 
 
 @pytest.fixture(scope='session')

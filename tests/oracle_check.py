@@ -312,8 +312,7 @@ def check_query(spark, con, query, sf_dir: str, checksum: bool = False) -> tuple
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
+    from cyclebane_spark.functions import bench_session
     from cyclebane_spark.queries import registry
 
     args = sys.argv[1:]
@@ -324,13 +323,7 @@ def main() -> int:
         sf_dir, args = args[0], args[1:]
     only = set(args)
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.driver.memory', '8g')
-        .appName('oracle-check')
-        .getOrCreate()
-    )
+    spark = bench_session('oracle-check')
     spark.sparkContext.setLogLevel('ERROR')
     con = connect(sf_dir)
 

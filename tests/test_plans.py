@@ -716,6 +716,24 @@ def test_containment_verify_falls_back_to_shuffle_hash(spark):
     assert 'NestedLoop' not in raw and 'CartesianProduct' not in raw
 
 
+@pytest.mark.parametrize(
+    'threshold, fits', [('10MB', True), ('-1', False), ('1b', False)]
+)
+def test_fits_broadcast_reads_threshold_with_spark_parser(spark, threshold, fits):
+    """_fits_broadcast reads autoBroadcastJoinThreshold through Spark's
+    typed getter, so byte-string units parse as the optimizer parses
+    them: a tiny frame fits under 10MB, never when broadcasting is off,
+    and not under a 1-byte threshold."""
+    from cyclebane_spark.queries.dedup import _fits_broadcast
+
+    old = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
+    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', threshold)
+    try:
+        assert _fits_broadcast(spark.range(3)) is fits
+    finally:
+        spark.conf.set('spark.sql.autoBroadcastJoinThreshold', old)
+
+
 def test_dataset_card_single_scan(spark):
     """The one-row card must come from ONE pass over documents — multiple
     distinct aggregates expand in-plan rather than re-scanning."""
@@ -820,8 +838,9 @@ def test_ivf_drift_gate_is_histogram_sized(spark):
     (a) the registered query's DECISION plan consumes one materialized
         K-row histogram (eager localCheckpoint) — the k-means assignment
         subtree, with its per-vector WindowGroupLimit top-1, must appear
-        ZERO times (r6 PLANS.md showed it three times, once per consuming
-        job), with the 1-row totals arriving via the only acceptable NLJ;
+        ZERO times (the uncheckpointed plan showed it three times, once per
+        consuming job), with the 1-row totals arriving via the only
+        acceptable NLJ;
     (b) the COMPOSED histogram plan (checkpoint=False) keeps the r6
         shape guarantees: partial-aggregated occupancy counts, the batch
         holdout filter reaching the component scan, no CartesianProduct.

@@ -4,7 +4,7 @@
 Min-label propagation needs DIAMETER rounds; the large-star/small-star
 contraction needs O(log n) regardless of diameter. This bench synthesizes
 the propagation worst case — long path graphs — and times both
-implementations end-to-end on local[32], verifying the labelings are
+implementations end-to-end in one local session, verifying the labelings are
 identical. Numbers land in SCALE.md's "CC round complexity" section.
 
 Usage: python tools/gen_chain_bench.py [n_chains] [chain_len]
@@ -22,8 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     import pyspark.sql.functions as F
-    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import Observation
 
+    from cyclebane_spark.functions import bench_session
     from cyclebane_spark.queries.dedup import (
         _connected_components,
         _star_round,
@@ -32,15 +33,7 @@ def main() -> None:
     n_chains = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     chain_len = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 
-    spark = (
-        SparkSession.builder.master('local[32]')
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.sql.adaptive.enabled', 'true')
-        .config('spark.ui.enabled', 'false')
-        .config('spark.driver.memory', '16g')
-        .appName('cyclebane-chain-bench')
-        .getOrCreate()
-    )
+    spark = bench_session('cyclebane-chain-bench')
     spark.sparkContext.setLogLevel('ERROR')
 
     n_nodes = n_chains * chain_len

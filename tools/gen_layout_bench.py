@@ -52,19 +52,12 @@ def candidates(out_dir: str, box: dict) -> int:
 
 def main() -> None:
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
+    from cyclebane_spark.functions import bench_session
     from cyclebane_spark.sinks import write_zordered
     from cyclebane_spark.tables import table
 
-    spark = (
-        SparkSession.builder.master('local[32]')
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.ui.showConsoleProgress', 'false')
-        .config('spark.driver.memory', '16g')
-        .appName('cyclebane-layout-bench')
-        .getOrCreate()
-    )
+    spark = bench_session('cyclebane-layout-bench')
     spark.sparkContext.setLogLevel('ERROR')
 
     ev = table(spark, SF_DIR, 'events').select('event_id', 'user_id', 'value')

@@ -92,19 +92,11 @@ def best_of(make_df, spark, k=3):
 
 def main() -> None:
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
 
+    from cyclebane_spark.functions import bench_session
     from cyclebane_spark.functions.ranking import with_global_position
 
-    spark = (
-        SparkSession.builder.master('local[32]')
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.sql.adaptive.enabled', 'true')
-        .config('spark.ui.showConsoleProgress', 'false')
-        .config('spark.driver.memory', '16g')
-        .appName('cyclebane-rank-skew-bench')
-        .getOrCreate()
-    )
+    spark = bench_session('cyclebane-rank-skew-bench')
     spark.sparkContext.setLogLevel('ERROR')
     load = os.getloadavg()[0]
 
@@ -145,7 +137,8 @@ def main() -> None:
     lines = [
         MARKER,
         '',
-        'Generated by `python tools/gen_rank_skew_bench.py` (local[32],',
+        'Generated by `python tools/gen_rank_skew_bench.py` '
+        f'(local[{spark.sparkContext.defaultParallelism}],',
         f'best-of-3). Corpus: {N_ROWS:,} rows synthesized in-plan, 90% of',
         'keys packed into [0, 100) and 10% spread over [0, 1e9) — the',
         'value-skew shape where a constant-width bucket for the shared',

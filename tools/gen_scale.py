@@ -29,7 +29,7 @@ KEEP_MARKERS = (
 )
 
 # Non-headline flagships swept alongside the headliners (benched via
-# tools/flagship_bench.py — same warmup/best-of-5 protocol).
+# `bench.py <FLAGSHIPS>` — same warmup/best-of-5 protocol).
 FLAGSHIPS = (
     'text_span_dedup',
     'text_packing_two_level',
@@ -133,9 +133,7 @@ def run_bench(sf_dir: str) -> dict:
 
 
 def run_flagships(sf_dir: str) -> dict:
-    return _run_tool(
-        sf_dir, os.path.join(ROOT, 'tools', 'flagship_bench.py'), *FLAGSHIPS
-    )
+    return _run_tool(sf_dir, os.path.join(ROOT, 'bench.py'), *FLAGSHIPS)
 
 
 def run_marginal(sf_dir: str) -> dict:
@@ -156,7 +154,8 @@ def main() -> None:
     lines = [
         '# SCALE — headline wall-time vs scale factor',
         '',
-        'Generated by `python tools/gen_scale.py` (local[32], best-of-5 per',
+        'Generated by `python tools/gen_scale.py` '
+        f"(local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}], best-of-5 per",
         'query after warmup — see bench.py; sf1 synthesized 10x-sf0.1 via',
         'tools/gen_sf1.py). MEASUREMENT NOTE (round 6): queries are now',
         'consumed via an all-columns checksum instead of count() — count()',
@@ -204,7 +203,7 @@ def main() -> None:
         '',
         '## Flagship sweep (non-headline operators)',
         '',
-        'Same protocol (tools/flagship_bench.py): the round-3 and round-4',
+        'Same protocol (bench.py with the query names): the round-3 and round-4',
         'flagship operators — span dedup, two-level packing, PQ/ADC ANN,',
         'PageRank, triangle enumeration, k-core peeling and incremental CC',
         'over the near-dup candidate graph, PMI collocation mining,',
@@ -332,7 +331,7 @@ def main() -> None:
         '~1.5-1.9x/decade q3/q5 ratios are therefore pinned as',
         'compute-bound, closing the last open ratio question (r8 #7).',
         'The 100 TB design margin lives in the plan',
-        'shapes (PLANS.md): broadcasts stay broadcasts, shuffle keys stay',
+        'shapes (tests/test_plans.py): broadcasts stay broadcasts, shuffle keys stay',
         'data-sized, and nothing collects to the driver.',
         '',
         'Sub-1x sf1/sf0.1 ratios (q1, the param sweep) are an input-LAYOUT',

@@ -40,20 +40,13 @@ OFF = 100_000_000
 
 def main() -> None:
     import pyspark.sql.functions as F
-    from pyspark.sql import SparkSession
+
+    from cyclebane_spark.functions import bench_session
 
     out_dir = os.environ.get('SPARK_GRAFT_SF1_DIR', '/tmp/cb_sf1')
-    spark = (
-        SparkSession.builder.master('local[32]')
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.ui.showConsoleProgress', 'false')
-        .config('spark.driver.memory', '16g')
-        .appName('cyclebane-gen-sf1')
-        .getOrCreate()
-    )
+    spark = bench_session('cyclebane-gen-sf1')
     spark.sparkContext.setLogLevel('ERROR')
     spark.conf.set('spark.sql.legacy.parquet.nanosAsLong', 'true')
-    spark.conf.set('spark.sql.session.timeZone', 'UTC')
 
     rep = spark.range(N_REP).select(F.col('id').cast('long').alias('__r'))
 

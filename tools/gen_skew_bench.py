@@ -75,8 +75,7 @@ def best_of(df, k=3):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from cyclebane_spark.functions import bench_session
     from cyclebane_spark.queries.dedup import (
         _adaptive_pairs_from_bands,
         _minhash_bands,
@@ -84,15 +83,7 @@ def main() -> None:
         _salted_pairs_from_bands,
     )
 
-    spark = (
-        SparkSession.builder.master('local[32]')
-        .config('spark.sql.shuffle.partitions', '32')
-        .config('spark.sql.adaptive.enabled', 'true')
-        .config('spark.ui.showConsoleProgress', 'false')
-        .config('spark.driver.memory', '16g')
-        .appName('cyclebane-skew-bench')
-        .getOrCreate()
-    )
+    spark = bench_session('cyclebane-skew-bench')
     spark.sparkContext.setLogLevel('ERROR')
     load = os.getloadavg()[0]
 
@@ -129,7 +120,8 @@ def main() -> None:
     lines = [
         MARKER,
         '',
-        'Generated by `python tools/gen_skew_bench.py` (local[32],',
+        'Generated by `python tools/gen_skew_bench.py` '
+        f'(local[{spark.sparkContext.defaultParallelism}],',
         'best-of-3). Corpus: 50k docs synthesized in-plan, 1 in '
         f'{HOT_FRACTION} sharing',
         'identical boilerplate text — every LSH band funnels those '
