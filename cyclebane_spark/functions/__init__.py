@@ -66,14 +66,25 @@ def word_ngrams_of(toks: Column | str, n: int) -> Column:
     Arrays with fewer than ``n`` tokens yield an empty array (matching SQL
     ``range(0, size - n + 1)``, which is empty when size < n); without the
     guard ``sequence(0, size - n)`` would DESCEND and emit bogus partial
-    grams.
+    grams. A NULL array yields an empty array too.
+
+    The token array is bound ONCE per row, as the lambda variable of a
+    one-element ``transform(array(toks), t -> grams(t))``, and the grams
+    are built from that variable. Lambda bodies are interpreted per
+    element with no common-subexpression elimination, so a ``toks``
+    expression captured inside the per-position lambda (``split(text)``
+    after projection collapse) would be re-evaluated n times per gram:
+    O(tokens^2) regex splits per document.
     """
-    toks = _col(toks)
-    seq = F.sequence(F.lit(0), F.size(toks) - n)
-    gram = lambda i: F.concat_ws(' ', *[F.get(toks, i + k) for k in range(n)])  # noqa: E731
-    return F.when(
-        F.size(toks) >= n, F.transform(seq, gram)
-    ).otherwise(F.array().cast('array<string>'))
+
+    def grams(t: Column) -> Column:
+        seq = F.sequence(F.lit(0), F.size(t) - n)
+        gram = lambda i: F.concat_ws(' ', *[F.get(t, i + k) for k in range(n)])  # noqa: E731
+        return F.when(F.size(t) >= n, F.transform(seq, gram)).otherwise(
+            F.array().cast('array<string>')
+        )
+
+    return F.flatten(F.transform(F.array(_col(toks)), grams))
 
 
 def shingles(text: Column | str, n: int = 3) -> Column:

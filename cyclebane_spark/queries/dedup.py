@@ -6,9 +6,10 @@ sums, single-op IEEE arithmetic) so each operator has an exact DuckDB oracle.
 
 Scale design (100 TB):
 - exact dedup: one shuffle on the fingerprint hash — no text comparison.
-- MinHash LSH: per-doc signatures are a narrow aggregate (16 mins) over the
-  exploded shingle stream (map-side combinable); candidate generation is a
-  self-join on (band_id, band_hash) — shuffle keyed on *buckets*, never
+- MinHash LSH: per-doc signatures are one narrow projection — a fold over
+  each document's shingle array carrying all 16 running mins, no shingle
+  explode and no signature shuffle; candidate generation groups the band
+  rows on (band_id, band_hash) — shuffle keyed on *buckets*, never
   all-pairs. Skewed buckets (boilerplate shingles) would salt or cap.
 - SimHash: embarrassingly parallel signature per doc; near-dup lookup is a
   bucket join on the signature.
@@ -151,12 +152,10 @@ def _minhash_bands(docs):
     NO shingle explode and NO signature shuffle. The md5 is hoisted into
     its own pre-transform so it runs exactly once per shingle (interpreted
     HOF lambdas get no codegen CSE, so an inlined md5 in both h1 and h2
-    substrings would really hash twice — measured ~10% of the query at
-    sf0.1; the extra array traversal the hoist costs is cheaper than the
-    second hash). The single fold replaces 16 separate array traversals
-    (array HOFs are interpreted per element, so traversal count — not
-    arithmetic — was the hot cost: ~30% of the query at sf0.1), so
-    widening N_PERM costs arithmetic, not passes over the array.
+    substrings would really hash twice). The single fold replaces 16
+    separate array traversals (array HOFs are interpreted per element, so
+    traversal count, not arithmetic, is the cost), so widening N_PERM
+    costs arithmetic, not passes over the array.
 
     The fold is stated as ONE SQL string through ``F.expr``, not as nested
     Column lambdas: building the 16-field struct accumulator through the
@@ -176,11 +175,9 @@ def _minhash_bands(docs):
     Shingles are deliberately NOT deduplicated here (unlike
     :func:`cyclebane_spark.functions.shingles`, whose distinct IS the
     semantics for Jaccard): a min-fold is duplicate-insensitive, so the
-    signatures are identical either way, and skipping the per-doc
-    array_distinct (string hashing of every shingle) is ~25% of the query
-    at sf0.1 — re-hashing duplicate shingles through md5 costs less than
-    deduplicating them first. The oracle keeps list_distinct; pair sets
-    are bit-equal.
+    signatures are identical either way, and the per-doc array_distinct
+    would string-hash every shingle only to save md5s of the few
+    duplicates. The oracle keeps list_distinct; pair sets are bit-equal.
     """
     sh = docs.select('doc_id', _shingle_arr_expr().alias('sh'))
     sig = sh.select('doc_id', _minhash_sig_expr().alias('s')).select(
@@ -424,6 +421,20 @@ def _cc_oracle() -> str:
     )
 
 
+def _symmetrize(pairs, a: str, b: str):
+    """Undirected pair list -> directed edge list (s, d): both (a, b) and
+    (b, a) for every pair, in ONE pass over ``pairs``. A ``fwd.union(rev)``
+    would plan the pair subtree twice (Union branches share no exchange,
+    so e.g. a broadcast similarity join upstream runs twice)."""
+    e = F.explode(
+        F.array(
+            F.struct(F.col(a).alias('s'), F.col(b).alias('d')),
+            F.struct(F.col(b).alias('s'), F.col(a).alias('d')),
+        )
+    )
+    return pairs.select(e.alias('e')).select('e.s', 'e.d')
+
+
 def _connected_components(
     pairs, nodes, a: str, b: str, node_col: str, max_rounds: int = 25
 ):
@@ -448,14 +459,12 @@ def _connected_components(
     """
     from pyspark.sql import Observation
 
-    fwd = pairs.select(F.col(a).alias('s'), F.col(b).alias('d'))
-    rev = pairs.select(F.col(b).alias('s'), F.col(a).alias('d'))
-    edges = fwd.union(rev)
+    edges = _symmetrize(pairs, a, b)
     if provably_small(edges):
         # r12 optimization (guide §1.2 step 2 — per-round fixed cost): on
-        # the small local layout the unioned edge list checkpoints as
-        # 2 x shuffle.partitions map partitions, so EVERY round schedules
-        # ~100+ tiny tasks over a few-hundred-row edge list; an
+        # the small local layout the edge list checkpoints as one map
+        # partition per upstream shuffle partition, so EVERY round
+        # schedules many tiny tasks over a few-hundred-row edge list; an
         # AQE-elastic repartition lets the coalescer shrink the
         # checkpoint to a handful of partitions (pipeline_embedding_
         # clusters CC stage: 2.38s -> 1.71s best-of-5 at sf0.1,
@@ -843,9 +852,7 @@ def graph_pagerank_neardup(spark, sf_dir):
     """Integer-exact PageRank (3 unrolled iterations, damping 0.85) over
     the symmetrized MinHash-LSH candidate graph. See the module note."""
     pairs = _minhash_pairs(spark, sf_dir)
-    edges = pairs.select(
-        F.col('doc_a').alias('s'), F.col('doc_b').alias('d')
-    ).unionAll(pairs.select(F.col('doc_b').alias('s'), F.col('doc_a').alias('d')))
+    edges = _symmetrize(pairs, 'doc_a', 'doc_b')
     # The pair set feeds the edge list, degree table, AND every iteration's
     # contribution join — persist once (same idiom as the k-means family).
     from pyspark import StorageLevel
@@ -1417,20 +1424,13 @@ def dedup_cc_largestar(spark, sf_dir):
     from pyspark.sql import Observation
 
     pairs = _minhash_pairs(spark, sf_dir)
-    fwd = pairs.select(F.col('doc_a').alias('s'), F.col('doc_b').alias('d'))
-    rev = pairs.select(F.col('doc_b').alias('s'), F.col('doc_a').alias('d'))
-    edges = fwd.union(rev).distinct().localCheckpoint()
+    edges = _symmetrize(pairs, 'doc_a', 'doc_b').distinct().localCheckpoint()
     prev = None
     stable = False
     for _ in range(12):  # O(log n) rounds; 2^12 components is the cap here
         # Large star consumes the symmetric list; small star consumes the
         # larger->smaller orientation of the large star's output.
-        sym = _star_round(
-            edges.select('s', 'd')
-            .unionByName(edges.select(F.col('d').alias('s'), F.col('s').alias('d')))
-            .distinct(),
-            large=True,
-        )
+        sym = _star_round(_symmetrize(edges, 's', 'd').distinct(), large=True)
         directed = (
             sym.select(F.greatest('s', 'd').alias('s'), F.least('s', 'd').alias('d'))
             .distinct()
@@ -1664,16 +1664,14 @@ def _cos_capped_postings(spark, sf_dir):
     doc_id repartition barrier, the map-side-combinable df count, and
     the broadcast anti join dropping hot terms."""
     docs = table(spark, sf_dir, 'documents')
-    # Tokenize once behind a doc_id repartition — the same
-    # materialization barrier as dedup_exact_substr's gram stage: built
-    # straight from word_ngrams, projection collapse inlines split(text)
-    # into every F.get of every position, re-splitting each document 3x
-    # per term (measured 17.5s -> 3.4s at sf0.1 across this query's
-    # postings references). r11 optimization: spread_cluster pins the
-    # barrier's partition count to defaultParallelism on the few-file
-    # driver layout (AQE's parallelism-first coalescing left the ~3x gram
-    # stage above the few-MB local shuffle on 2-3 of 32 cores) and keeps
-    # the AQE-elastic repartition('doc_id') on production layouts.
+    # Tokenize once behind a doc_id repartition — the same parallelism
+    # barrier as dedup_exact_substr's gram stage: the ~3x gram explode and
+    # the term counts above it run on the barrier's partitions, not on
+    # the scan's. spread_cluster pins the barrier's partition count to
+    # defaultParallelism on the few-file driver layout (AQE's
+    # parallelism-first coalescing left the gram stage above the few-MB
+    # local shuffle on 2-3 of 32 cores) and keeps the AQE-elastic
+    # repartition('doc_id') on production layouts.
     toks = spread_cluster(
         docs.select('doc_id', _CF.tokens('text').alias('toks')), 'doc_id'
     )
@@ -2573,8 +2571,6 @@ def graph_label_propagation(spark, sf_dir):
     """Synchronous 2-round LPA communities over the LSH candidate graph
     (see module note)."""
     pairs = _minhash_pairs(spark, sf_dir)
-    fwd = pairs.select(F.col('doc_a').alias('s'), F.col('doc_b').alias('d'))
-    rev = pairs.select(F.col('doc_b').alias('s'), F.col('doc_a').alias('d'))
     docs = table(spark, sf_dir, 'documents').select('doc_id')
     # self-loops: a node's own label joins the count, which breaks the
     # synchronous-LPA two-cycle (an isolated duplicate pair would otherwise
@@ -2582,7 +2578,7 @@ def graph_label_propagation(spark, sf_dir):
     self_loops = docs.select(
         F.col('doc_id').alias('s'), F.col('doc_id').alias('d')
     )
-    edges = fwd.union(rev).union(self_loops).persist()
+    edges = _symmetrize(pairs, 'doc_a', 'doc_b').union(self_loops).persist()
     labels = docs.select('doc_id', F.col('doc_id').alias('lbl'))
     for _ in range(LPA_ROUNDS):
         counts = (
@@ -2945,15 +2941,11 @@ def _exsub_cold_grams(spark, sf_dir, with_source: bool = False):
     for the incremental admission variant (the standing self-join keeps
     the stream narrow)."""
     docs = table(spark, sf_dir, 'documents')
-    # Tokenize ONCE behind an exchange. Building the grams straight from
-    # word_ngrams('text', 8) inlines split(text) into all 8 F.get calls of
-    # every position (projection collapse), re-splitting each document
-    # ~8 x len(toks) times — measured 30.5 s at sf0.1 vs 1.5 s for this
-    # form. The doc_id repartition is the materialization barrier AND
-    # makes the gram stage's parallelism independent of the input file
-    # count (a single-file corpus otherwise runs the whole explode+join
-    # in one task — the sf0.1 > sf1 wall-time inversion the first SCALE
-    # sweep caught). One extra corpus-sized shuffle of (doc_id, toks),
+    # Tokenize ONCE behind an exchange. The doc_id repartition makes the
+    # gram stage's parallelism independent of the input file count (a
+    # single-file corpus otherwise runs the whole explode+join in one
+    # task — the sf0.1 > sf1 wall-time inversion the first SCALE sweep
+    # caught). One extra corpus-sized shuffle of (doc_id, toks),
     # amortized by the ~8x larger gram stage it parallelizes.
     keep = ['doc_id', 'source'] if with_source else ['doc_id']
     # r11 optimization: spread_cluster (see _cos_capped_postings) — the

@@ -2270,9 +2270,10 @@ def _bpe_merge_rounds(v, carry=()):
     v = v.persist()
     merges = []
     for step in range(1, BPE_ROUNDS + 1):
-        # project the symbol array ONCE — interpreted HOF lambdas get no
-        # common-subexpression elimination, so inlining the split into the
-        # transform would re-split per element (the minhash md5 lesson)
+        # project the symbol array ONCE, outside the lambda — interpreted
+        # HOF lambdas get no common-subexpression elimination, so a split
+        # inside the transform would re-split per element (the same reason
+        # functions.word_ngrams_of binds its token array once)
         pairs = (
             v.select(
                 F.split(

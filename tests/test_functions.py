@@ -93,6 +93,56 @@ def test_word_ngrams_short_texts_yield_empty_not_bogus_partials(spark):
     assert a == b
 
 
+GRAM_TEXTS = [
+    'one two three four five six seven eight nine ten eleven twelve',
+    '   leading spaces here and there now',
+    'trailing spaces here and there now   ',
+    'repeated    inner   whitespace\tand\ttabs here  too',
+    'a b a b a b a b a b a b',
+    'few words',
+    'x',
+    '',
+    '   ',
+    None,
+]
+
+
+def _ref_tokens(text):
+    """Spark's tokens(): trim strips spaces only, split keeps empties."""
+    import re
+
+    return None if text is None else re.split(r'\s+', text.strip(' '))
+
+
+def _ref_grams(toks, n):
+    if toks is None:
+        return []
+    return [' '.join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize('n', [1, 2, 3, 5, 8])
+def test_gram_builders_match_python_reference(spark, n):
+    """word_ngrams, word_ngrams_of (over tokens() and over a materialized
+    array column) and shingles equal the pure-Python definition for every
+    n: grams in document order, ``[]`` below n tokens and for NULL."""
+    rows = [(t, _ref_tokens(t)) for t in GRAM_TEXTS]
+    df = spark.createDataFrame(rows, 't string, toks array<string>').select(
+        't',
+        CF.word_ngrams('t', n).alias('wn'),
+        CF.word_ngrams_of(CF.tokens('t'), n).alias('wn_of'),
+        CF.word_ngrams_of('toks', n).alias('wn_arr'),
+        CF.shingles('t', n).alias('sh'),
+    )
+    got = df.collect()
+    assert len(got) == len(GRAM_TEXTS)
+    for r in got:
+        want = _ref_grams(_ref_tokens(r.t), n)
+        assert r.wn == want, (r.t, n)
+        assert r.wn_of == want, (r.t, n)
+        assert r.wn_arr == want, (r.t, n)
+        assert r.sh == list(dict.fromkeys(want)), (r.t, n)
+
+
 def test_hash_bucket_range_and_stability(spark, docs):
     out = docs.select('doc_id', CF.hash_bucket('doc_id', 8).alias('b'))
     rows = {r.doc_id: r.b for r in out.collect()}

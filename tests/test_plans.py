@@ -356,6 +356,67 @@ def test_gopher_gram_aggs_combine_map_side(spark):
     assert raw.count('partial_count') >= 2
 
 
+def lambda_bodies(raw: str) -> list[str]:
+    """Every ``lambdafunction(...)`` in a plan string, up to its balanced
+    closing paren (nested lambdas are listed on their own as well)."""
+    bodies = []
+    for m in re.finditer(r'lambdafunction\(', raw):
+        depth, k = 1, m.end()
+        while depth and k < len(raw):
+            depth += {'(': 1, ')': -1}.get(raw[k], 0)
+            k += 1
+        bodies.append(raw[m.start() : k])
+    return bodies
+
+
+@pytest.mark.parametrize(
+    'name',
+    [
+        'dedup_minhash_lsh',
+        'dedup_ngram_jaccard',
+        'text_bigram_lm_score',
+        'text_decontamination',
+    ],
+)
+def test_gram_lambdas_never_resplit_the_text(spark, name):
+    """The gram builder binds each document's token array once: no lambda
+    body may contain the split. Lambdas are interpreted per element with
+    no common-subexpression elimination, so a split captured inside the
+    per-position lambda re-splits the document n times per gram."""
+    bodies = lambda_bodies(raw_plan_of(spark, name))
+    assert bodies, name
+    resplit = [b for b in bodies if 'split(' in b]
+    assert not resplit, resplit[0][:500]
+
+
+def test_symmetrize_is_one_pass_fwd_union_rev(spark):
+    """_symmetrize yields exactly the multiset fwd ∪ rev, with no Union:
+    the pair subtree is planned once, so the label-blocked cosine
+    broadcast join under pipeline_embedding_clusters runs once, not twice."""
+    import pyspark.sql.functions as F
+
+    from cyclebane_spark.queries.dedup import _symmetrize, dedup_embedding_cosine
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 2), (4, 4), (5, 1)], 'a long, b long'
+    )
+    sym = _symmetrize(pairs, 'a', 'b')
+    fwd = pairs.select(F.col('a').alias('s'), F.col('b').alias('d'))
+    rev = pairs.select(F.col('b').alias('s'), F.col('a').alias('d'))
+    assert sym.columns == ['s', 'd']
+    assert sorted(sym.collect()) == sorted(fwd.union(rev).collect())
+
+    def raw(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert 'Union' not in raw(sym)
+    emb = dedup_embedding_cosine(spark, SF_DIR).select('vec_a', 'vec_b')
+    assert raw(emb).count('BroadcastHashJoin') == 1
+    edges = raw(_symmetrize(emb, 'vec_a', 'vec_b'))
+    assert 'Union' not in edges
+    assert edges.count('BroadcastHashJoin') == 1, edges
+
+
 def _tree_depth(line: str) -> int:
     """Offset of the operator name within a plan tree line (its depth)."""
     return re.match(r'^[\s:+*|-]*', line).end()
@@ -1070,10 +1131,9 @@ def test_exact_substr_anchor_join_and_runmerge_reuses_partitioning(spark):
     """dedup_exact_substr: the anchor join must key on the GRAM (inverted-
     index shape — broadcast at tiny SF, shuffled hash join at scale; the
     doc_a < doc_b orientation is a residual, never a nested-loop driver);
-    the tokenize-once doc_id repartition (the materialization barrier
-    that stops projection collapse from re-splitting each doc 8x per
-    position, and decouples gram-stage parallelism from the input file
-    count) must be REUSED by the diagonal run-merge — da is a subset of
+    the tokenize-once doc_id repartition (the barrier that decouples
+    gram-stage parallelism from the input file count) must be REUSED by
+    the diagonal run-merge — da is a subset of
     the (da, db, diag) clustering, so window + partial/final aggregate
     need ZERO additional exchange. The hot-gram anchor cap must be a
     BROADCAST anti join on each side (the checkpointed hot set is

@@ -29,7 +29,10 @@ def _gate():
 
 
 def _fake_run(monkeypatch, gate, stdout: str, returncode: int):
-    def fake(cmd, capture_output, text, env):
+    def fake(cmd, capture_output, text, **kw):
+        # the oracle subprocess inherits the caller's environment, so
+        # bench_session picks its cpu count; the gate forces none
+        assert 'env' not in kw, kw
         return types.SimpleNamespace(
             stdout=stdout, stderr='', returncode=returncode
         )

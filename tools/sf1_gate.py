@@ -51,8 +51,7 @@ def _run(sf1_dir: str, names: list[str], checksum: bool) -> tuple[set, str]:
     if checksum:
         cmd.append('--checksum')
     cmd += [sf1_dir, *names]
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get('SPARK_GRAFT_CPUS', '16'))
-    out = subprocess.run(cmd, capture_output=True, text=True, env=env)
+    out = subprocess.run(cmd, capture_output=True, text=True)
     # explicit newline join (ADVICE r10): if stdout lacks a trailing
     # newline, the first stderr line would glue onto the last stdout
     # line and the ^-anchored FAIL/verdict regexes below would miss it
