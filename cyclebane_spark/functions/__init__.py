@@ -240,8 +240,8 @@ def bench_session(app_name: str):
     times. Callers: ``bench.py``, ``perfbench/worker.py``, the ``spark``
     fixture in ``tests/conftest.py``, ``tests/oracle_check.py``, and the
     tools ``dump_plan``, ``marginal_bench``, ``sf1_twin_evidence``,
-    ``gen_sf1``, ``gen_skew_bench``, ``gen_chain_bench``,
-    ``gen_layout_bench`` and ``gen_rank_skew_bench``.
+    ``gen_sf1``, ``gen_skew_bench``, ``gen_chain_bench`` and
+    ``gen_layout_bench``.
 
     ``local[cpus]`` with one shuffle partition per core, AQE on, the
     session time zone pinned to UTC, and Spark's DEFAULT 10MB

@@ -1413,21 +1413,22 @@ def _star_round(edges, large: bool):
     return out.filter(F.col('s') != F.col('d')).distinct()
 
 
-@register('dedup_cc_largestar', oracle=_cc_oracle())
-def dedup_cc_largestar(spark, sf_dir):
-    """Duplicate clusters via alternating large-star/small-star contraction
-    (module note above): every document labeled with the min doc_id of its
-    near-dup component. Identical result set to the label-propagation
-    variant `dedup_connected_components` — both run against the same
-    recursive-CTE oracle, and tests/test_dedup.py asserts the two Spark
-    implementations agree on adversarial chain/star graphs."""
+LARGESTAR_MAX_ROUNDS = 12  # O(log n) rounds: 2^12 components is the cap
+
+
+def _largestar_components(pairs, nodes, a: str, b: str, node_col: str):
+    """Alternating large-star/small-star contraction (module note above)
+    over an undirected pair list: the same call shape and result as
+    :func:`_connected_components` — (node_col, cluster_id) with cluster_id
+    = min node id of the component — in O(log n) rounds regardless of
+    diameter. A round is stable when its edge count and edge-set hash
+    repeat the previous round's; raises RuntimeError if
+    ``LARGESTAR_MAX_ROUNDS`` pass without that."""
     from pyspark.sql import Observation
 
-    pairs = _minhash_pairs(spark, sf_dir)
-    edges = _symmetrize(pairs, 'doc_a', 'doc_b').distinct().localCheckpoint()
+    edges = _symmetrize(pairs, a, b).distinct().localCheckpoint()
     prev = None
-    stable = False
-    for _ in range(12):  # O(log n) rounds; 2^12 components is the cap here
+    for _ in range(LARGESTAR_MAX_ROUNDS):
         # Large star consumes the symmetric list; small star consumes the
         # larger->smaller orientation of the large star's output.
         sym = _star_round(_symmetrize(edges, 's', 'd').distinct(), large=True)
@@ -1447,21 +1448,38 @@ def dedup_cc_largestar(spark, sf_dir):
         )
         cur = (obs.get['n'], obs.get['sig'])
         if cur == prev:
-            stable = True
             break
         prev = cur
-    if not stable:
+    else:
         raise RuntimeError(
-            'alternating-star contraction did not stabilize in 12 rounds'
+            'alternating-star contraction did not converge in '
+            f'{LARGESTAR_MAX_ROUNDS} rounds'
         )
     # Converged edges are stars (member -> component min). Singletons map to
     # themselves; min() guards the (already converged) star property.
-    nodes = table(spark, sf_dir, 'documents').select('doc_id')
     stars = edges.groupBy('s').agg(F.min('d').alias('root'))
     return nodes.join(
-        stars, nodes['doc_id'] == stars['s'], 'left'
+        stars, nodes[node_col] == stars['s'], 'left'
     ).select(
-        'doc_id', F.coalesce('root', 'doc_id').alias('cluster_id')
+        node_col, F.coalesce('root', node_col).alias('cluster_id')
+    )
+
+
+@register('dedup_cc_largestar', oracle=_cc_oracle())
+def dedup_cc_largestar(spark, sf_dir):
+    """Duplicate clusters via alternating large-star/small-star contraction
+    (module note above): every document labeled with the min doc_id of its
+    near-dup component. Identical result set to the label-propagation
+    variant `dedup_connected_components` — both run against the same
+    recursive-CTE oracle, and tests/test_pipeline_ops.py asserts that
+    :func:`_largestar_components` and :func:`_connected_components` agree
+    on adversarial chain/star/clique graphs."""
+    return _largestar_components(
+        _minhash_pairs(spark, sf_dir),
+        table(spark, sf_dir, 'documents').select('doc_id'),
+        'doc_a',
+        'doc_b',
+        'doc_id',
     )
 
 
@@ -1490,6 +1508,50 @@ def dedup_cc_largestar(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _COS_PAIR_K = 25
+
+
+def _pair_dots(tf, term: str):
+    """Sort-merge AllPairs dot product over (doc_id, term, tf) postings:
+    (doc_a, doc_b, dot) for every doc_a < doc_b sharing a term, with the
+    integer dot summed per pair."""
+    a = tf.select(
+        F.col('doc_id').alias('doc_a'), term, F.col('tf').alias('tfa')
+    )
+    b = tf.select(
+        F.col('doc_id').alias('doc_b'), term, F.col('tf').alias('tfb')
+    )
+    return (
+        a.join(b, term)
+        .filter(F.col('doc_a') < F.col('doc_b'))
+        .groupBy('doc_a', 'doc_b')
+        .agg(F.sum(F.col('tfa') * F.col('tfb')).cast('bigint').alias('dot'))
+    )
+
+
+def _top_cos2_pairs(dp, tf):
+    """Top-``_COS_PAIR_K`` pairs of ``dp`` by cosine^2 = dot^2/(|a|^2*|b|^2),
+    with the integer squared norms summed from the ``tf`` postings and the
+    doc-id tiebreak."""
+    n2 = tf.groupBy('doc_id').agg(
+        F.sum(F.col('tf') * F.col('tf')).cast('bigint').alias('n2')
+    )
+    na = n2.select(F.col('doc_id').alias('doc_a'), F.col('n2').alias('na2'))
+    nb = n2.select(F.col('doc_id').alias('doc_b'), F.col('n2').alias('nb2'))
+    return (
+        dp.join(na, 'doc_a')
+        .join(nb, 'doc_b')
+        .select(
+            'doc_a',
+            'doc_b',
+            'dot',
+            (
+                (F.col('dot') * F.col('dot')).cast('double')
+                / (F.col('na2') * F.col('nb2')).cast('double')
+            ).alias('cos2'),
+        )
+        .orderBy(F.desc('cos2'), 'doc_a', 'doc_b')
+        .limit(_COS_PAIR_K)
+    )
 
 
 @register(
@@ -1522,7 +1584,7 @@ def dedup_tf_cosine_pairs(spark, sf_dir):
     """Top-25 most cosine-similar document pairs over TF bag-of-words
     vectors via the inverted index (module note above).
 
-    MEASURED SCALE LIMIT (round-7 sf1 oracle pass): the synthetic corpus
+    MEASURED SCALE LIMIT (sf1 oracle pass): the synthetic corpus
     has a CLOSED ~300-term vocabulary, so every base token is a stop
     token (df ~ N) and the exact AllPairs cost sum(df^2) reaches ~2.5e10
     pair-partials at sf1 (50k docs) — the one registry query whose sf1
@@ -1531,34 +1593,15 @@ def dedup_tf_cosine_pairs(spark, sf_dir):
     corpora the hot tail is bounded, and corpus-scale similarity goes
     through the shipped sub-quadratic paths (MinHash-LSH banding, the
     ANN family, `dedup_jaccard_prefix_filter`)."""
-    # r11 optimization (guide §1.2 step 1 / §2.3-2.4): the old shape was a
-    # token self-join (SortMergeJoin on ~300 distinct toks emitting the
-    # 2.2e8 a<b pair-partials at sf0.1) followed by groupBy(doc_a, doc_b).
-    # With 12.5M output groups the per-partition group multiplicity is
-    # ~0.6, so the partial aggregate reduced NOTHING while thrashing an
-    # ~8M-entry hash map per task, and the full 2.2e8-row stream crossed
-    # the pair exchange — measured 112s at sf0.1 (join alone 39s, agg
-    # +84s). Restructured to the broadcast-postings AllPairs shape:
-    # spread the corpus by doc_id ONCE, build the (tok -> [(doc_b, tfb)])
-    # posting lists (116k entries in ~300 arrays — the small side),
-    # broadcast them onto the doc-partitioned side, and generate each
-    # doc's pair partials with an in-plan filter+explode. Every downstream
-    # clustering (tf's (doc_id, tok) agg, n2, the final (doc_a, doc_b)
-    # agg) is a SUPERSET of the spread key, so the pair stream never
-    # crosses an exchange, and the partial aggregate now sees only its own
-    # docs' groups (~400k/task, multiplicity ~18 — effective again).
-    # Identical integer dot/norm arithmetic; verified oracle-exact at
-    # sf0.001/0.01/0.1. Measured 112s -> ~8s at sf0.1.
-    #
-    # r12 guard (VERDICT r11 #2): the postings relation is O(total token
-    # occurrences) — corpus-sized, NOT bounded like a dim table — so an
-    # unconditional F.broadcast would turn "slow at scale" into "driver
-    # OOM at scale". Gate the broadcast shape on the same small-local-
-    # few-file predicate as spread_small (spread_small returns the input
-    # UNCHANGED exactly when the layout is not provably small): big or
-    # remote layouts take the original sort-merge AllPairs join, which
-    # degrades gracefully. Same integer arithmetic on both branches; both
-    # shapes verified oracle-exact at sf0.001/0.01/0.1.
+    # Two plan shapes over the same integer dot/norm arithmetic. On a
+    # provably small local layout (spread_small returned a new frame) the
+    # corpus is spread by doc_id once and the (tok -> [(doc_b, tfb)])
+    # postings are broadcast: every later clustering (tf's (doc_id, tok)
+    # agg, n2, the (doc_a, doc_b) agg) is a superset of the spread key, so
+    # the pair partials never cross an exchange and each partial aggregate
+    # sees only its own docs' groups. The postings are corpus-sized, not
+    # bounded like a dim table, so every other layout takes the sort-merge
+    # AllPairs join instead of risking a driver-side broadcast.
     base = table(spark, sf_dir, 'documents')
     docs = spread_small(base, 'doc_id')
     small_local = docs is not base
@@ -1566,9 +1609,6 @@ def dedup_tf_cosine_pairs(spark, sf_dir):
         docs.select('doc_id', F.explode(_CF.tokens('text')).alias('tok'))
         .groupBy('doc_id', 'tok')
         .agg(F.count(F.lit(1)).alias('tf'))
-    )
-    n2 = tf.groupBy('doc_id').agg(
-        F.sum(F.col('tf') * F.col('tf')).cast('bigint').alias('n2')
     )
     if small_local:
         postings = tf.groupBy('tok').agg(
@@ -1593,35 +1633,8 @@ def dedup_tf_cosine_pairs(spark, sf_dir):
             )
         )
     else:
-        a = tf.select(
-            F.col('doc_id').alias('doc_a'), 'tok', F.col('tf').alias('tfa')
-        )
-        b = tf.select(
-            F.col('doc_id').alias('doc_b'), 'tok', F.col('tf').alias('tfb')
-        )
-        dp = (
-            a.join(b, 'tok')
-            .filter(F.col('doc_a') < F.col('doc_b'))
-            .groupBy('doc_a', 'doc_b')
-            .agg(F.sum(F.col('tfa') * F.col('tfb')).cast('bigint').alias('dot'))
-        )
-    na = n2.select(F.col('doc_id').alias('doc_a'), F.col('n2').alias('na2'))
-    nb = n2.select(F.col('doc_id').alias('doc_b'), F.col('n2').alias('nb2'))
-    return (
-        dp.join(na, 'doc_a')
-        .join(nb, 'doc_b')
-        .select(
-            'doc_a',
-            'doc_b',
-            'dot',
-            (
-                (F.col('dot') * F.col('dot')).cast('double')
-                / (F.col('na2') * F.col('nb2')).cast('double')
-            ).alias('cos2'),
-        )
-        .orderBy(F.desc('cos2'), 'doc_a', 'doc_b')
-        .limit(_COS_PAIR_K)
-    )
+        dp = _pair_dots(tf, 'tok')
+    return _top_cos2_pairs(dp, tf)
 
 
 # ---------------------------------------------------------------------------
@@ -1738,38 +1751,7 @@ def dedup_tf_cosine_capped(spark, sf_dir):
     # the tokenize+explode+agg pipeline per reference (4 passes -> 2:
     # one for the df count, one here).
     cold = _cos_capped_postings(spark, sf_dir).localCheckpoint()
-    n2 = cold.groupBy('doc_id').agg(
-        F.sum(F.col('tf') * F.col('tf')).cast('bigint').alias('n2')
-    )
-    a = cold.select(
-        F.col('doc_id').alias('doc_a'), 'term', F.col('tf').alias('tfa')
-    )
-    b = cold.select(
-        F.col('doc_id').alias('doc_b'), 'term', F.col('tf').alias('tfb')
-    )
-    dp = (
-        a.join(b, 'term')
-        .filter(F.col('doc_a') < F.col('doc_b'))
-        .groupBy('doc_a', 'doc_b')
-        .agg(F.sum(F.col('tfa') * F.col('tfb')).cast('bigint').alias('dot'))
-    )
-    na = n2.select(F.col('doc_id').alias('doc_a'), F.col('n2').alias('na2'))
-    nb = n2.select(F.col('doc_id').alias('doc_b'), F.col('n2').alias('nb2'))
-    return (
-        dp.join(na, 'doc_a')
-        .join(nb, 'doc_b')
-        .select(
-            'doc_a',
-            'doc_b',
-            'dot',
-            (
-                (F.col('dot') * F.col('dot')).cast('double')
-                / (F.col('na2') * F.col('nb2')).cast('double')
-            ).alias('cos2'),
-        )
-        .orderBy(F.desc('cos2'), 'doc_a', 'doc_b')
-        .limit(_COS_PAIR_K)
-    )
+    return _top_cos2_pairs(_pair_dots(cold, 'term'), cold)
 
 
 # ---------------------------------------------------------------------------

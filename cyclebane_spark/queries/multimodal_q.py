@@ -38,11 +38,6 @@ from . import register
 )
 def multimodal_image_metadata(spark, sf_dir):
     """binary-column round trip: build payloads, parse them back via UDF."""
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     out = image_metadata(with_fake_images(docs))
     return out.select(
@@ -77,11 +72,6 @@ def multimodal_decode_stats(spark, sf_dir):
     run-to-run).  Exact per-image means are asserted in
     tests/test_multimodal.py against an independent numpy reference.
     """
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     decoded = decode_images(with_fake_images(docs))
     return decoded.select(
@@ -158,11 +148,6 @@ def multimodal_frame_sample(spark, sf_dir):
     numpy-only and asserted in tests/test_multimodal.py. Scale: fan-out
     happens per Arrow batch on executors — no shuffle at all.
     """
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     return sample_frames(with_fake_videos(docs), every_n=2).select(
         'doc_id', 'frame_idx'
@@ -182,11 +167,6 @@ def multimodal_audio_features(spark, sf_dir):
     """Audio feature extraction: the UDF parses the waveform header and
     computes rms/zero-crossings; the structural columns round-trip exactly
     against the oracle (the numpy features are covered by unit tests)."""
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     return audio_features(with_fake_audio(docs)).select(
         'doc_id', 'sample_rate', 'n_samples'
@@ -243,11 +223,6 @@ def multimodal_clip_filter(spark, sf_dir):
     binary payload (pandas UDF parse), the text embedding stays JVM-side."""
     from ..multimodal.media import embed_images, with_fake_images
 
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     embedded = embed_images(with_fake_images(docs)).withColumn(
         'txt_emb',
@@ -458,10 +433,5 @@ def multimodal_voice_activity(spark, sf_dir):
     """
     from ..multimodal.media import voice_activity, with_fake_vad_audio
 
-    # r12 optimization note (measured, REVERTED): spread_small before the
-    # Python stage lost in interleaved A/B at sf0.1 — the per-doc Python
-    # work here is header-parse cheap, so 32-way Python-worker round
-    # trips cost more than the single-task stage saves (same finding as
-    # multimodal_phash_dedup in r11). See OPTIMIZATION_r12.md batch 2.
     docs = table(spark, sf_dir, 'documents')
     return voice_activity(with_fake_vad_audio(docs))

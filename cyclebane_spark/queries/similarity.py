@@ -135,6 +135,30 @@ _SQL_BUCKET = 'concat(' + ', '.join(
 ) + ')'
 
 
+
+def _rp_lsh_buckets(spark, sf_dir):
+    """(vec_id, embedding, nrm, bucket): each embedding with its norm and
+    its 8-bit sign-LSH bucket, one bit per ``_PLANES`` hyperplane. The
+    plane constants are literals in the projection, so bucketing hashes
+    nothing at runtime."""
+    emb = table(spark, sf_dir, 'embeddings')
+    bits = [
+        F.when(
+            _spark_dot(
+                F.col('embedding'), F.array(*[F.lit(w) for w in plane])
+            ) >= 0,
+            '1',
+        ).otherwise('0')
+        for plane in _PLANES
+    ]
+    return emb.select(
+        'vec_id',
+        'embedding',
+        F.sqrt(_spark_dot(F.col('embedding'), F.col('embedding'))).alias('nrm'),
+        F.concat(*bits).alias('bucket'),
+    )
+
+
 @register(
     'explode_outer_long_tokens',
     oracle=r"""
@@ -202,22 +226,7 @@ def ann_rp_lsh_topk(spark, sf_dir):
     Probe multiple buckets (flip lowest-margin bits) to trade cost for
     recall.
     """
-    emb = table(spark, sf_dir, 'embeddings')
-    bits = [
-        F.when(
-            _spark_dot(
-                F.col('embedding'), F.array(*[F.lit(w) for w in plane])
-            ) >= 0,
-            '1',
-        ).otherwise('0')
-        for plane in _PLANES
-    ]
-    n = emb.select(
-        'vec_id',
-        'embedding',
-        F.sqrt(_spark_dot(F.col('embedding'), F.col('embedding'))).alias('nrm'),
-        F.concat(*bits).alias('bucket'),
-    )
+    n = _rp_lsh_buckets(spark, sf_dir)
     q = n.filter(F.col('vec_id') < N_QUERIES).alias('q')
     c = n.filter(F.col('vec_id') >= N_QUERIES).alias('c')
     joined = q.join(c, F.col('q.bucket') == F.col('c.bucket'))
@@ -1388,22 +1397,7 @@ _SQL_PROBES = (
 )
 def ann_rp_lsh_multiprobe(spark, sf_dir):
     """Hamming-1 multiprobe over the sign-LSH buckets (module note)."""
-    emb = table(spark, sf_dir, 'embeddings')
-    bits = [
-        F.when(
-            _spark_dot(
-                F.col('embedding'), F.array(*[F.lit(w) for w in plane])
-            ) >= 0,
-            '1',
-        ).otherwise('0')
-        for plane in _PLANES
-    ]
-    n = emb.select(
-        'vec_id',
-        'embedding',
-        F.sqrt(_spark_dot(F.col('embedding'), F.col('embedding'))).alias('nrm'),
-        F.concat(*bits).alias('bucket'),
-    )
+    n = _rp_lsh_buckets(spark, sf_dir)
     probes = F.expr(
         "array_prepend(transform(sequence(1, 8), i -> "
         "concat(substring(bucket, 1, i - 1), "

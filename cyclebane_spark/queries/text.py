@@ -640,6 +640,59 @@ def text_sentences_udtf(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+
+def _gopher_counts(docs):
+    """Per-doc Gopher counts over (doc_id, text): n_tokens, n_types and
+    top_cnt from the unigram counts, LEFT JOINed on doc_id with n_bigrams
+    and dup_bg (instances of bigrams seen more than once) from the bigram
+    counts. Every aggregate is keyed on doc_id or (doc_id, gram), so a
+    doc_id-partitioned input feeds them without another exchange."""
+    toks = F.split(F.trim(F.col('text')), r'\s+')
+    t = docs.select('doc_id', toks.alias('toks'))
+
+    u = (
+        t.select('doc_id', F.explode('toks').alias('g'))
+        .groupBy('doc_id', 'g')
+        .agg(F.count(F.lit(1)).alias('cnt'))
+    )
+    uni = u.groupBy('doc_id').agg(
+        F.sum('cnt').alias('n_tokens'),
+        F.count(F.lit(1)).alias('n_types'),
+        F.max('cnt').alias('top_cnt'),
+    )
+
+    bigrams = F.transform(
+        # range(1, len) in DuckDB is [1, len-1]: bigram i pairs toks[i],
+        # toks[i+1] (1-based). Spark mirrors with a 0-based sequence slice.
+        F.slice('toks', 1, F.greatest(F.size('toks') - 1, F.lit(0))),
+        lambda x, i: F.concat_ws(' ', x, F.col('toks')[i + 1]),
+    )
+    b = (
+        t.select('doc_id', F.explode(bigrams).alias('g'))
+        .groupBy('doc_id', 'g')
+        .agg(F.count(F.lit(1)).alias('cnt'))
+    )
+    bi = b.groupBy('doc_id').agg(
+        F.sum('cnt').alias('n_bigrams'),
+        F.sum(F.when(F.col('cnt') > 1, F.col('cnt')).otherwise(0)).alias('dup_bg'),
+    )
+    return uni.join(bi, 'doc_id', 'left')
+
+
+def _gopher_ratios():
+    """(type-token ratio, top-token fraction, dup-bigram fraction, pass
+    gate) Columns over :func:`_gopher_counts`. Unaliased, so a filter or a
+    select uses them without adding a projection."""
+    ttr = F.col('n_types').cast('double') / F.col('n_tokens')
+    top_frac = F.col('top_cnt').cast('double') / F.col('n_tokens')
+    dup_frac = F.when(
+        F.coalesce(F.col('n_bigrams'), F.lit(0)) > 0,
+        F.col('dup_bg').cast('double') / F.col('n_bigrams'),
+    ).otherwise(0.0)
+    passes = (ttr >= 0.5) & (top_frac <= 0.125) & (dup_frac <= 0.25)
+    return ttr, top_frac, dup_frac, passes
+
+
 @register(
     'text_gopher_repetition',
     oracle=r"""
@@ -695,59 +748,19 @@ def text_gopher_repetition(spark, sf_dir):
 
     Every ratio is a single BIGINT/BIGINT divide (one IEEE op — exact
     cross-engine); the boolean gate composes three deterministic compares.
-
-    r11 optimization: spread on doc_id — hash partitioning by doc_id
-    satisfies every downstream per-doc clustering ((doc_id, g) unigram
-    counts, (doc_id, bg) bigram counts, the per-doc rollups), so locally
-    the spread exchange replaces ALL of this query's aggregate exchanges
-    while the token explodes run core-wide; no-op on multi-split layouts.
+    The doc_id spread satisfies every per-doc clustering of
+    :func:`_gopher_counts`, so locally it replaces all of their exchanges
+    and the token explodes run core-wide; no-op on multi-split layouts.
     """
     docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
-    toks = F.split(F.trim(F.col('text')), r'\s+')
-    t = docs.select('doc_id', toks.alias('toks'))
-
-    u = (
-        t.select('doc_id', F.explode('toks').alias('g'))
-        .groupBy('doc_id', 'g')
-        .agg(F.count(F.lit(1)).alias('cnt'))
-    )
-    uni = u.groupBy('doc_id').agg(
-        F.sum('cnt').alias('n_tokens'),
-        F.count(F.lit(1)).alias('n_types'),
-        F.max('cnt').alias('top_cnt'),
-    )
-
-    bigrams = F.transform(
-        # range(1, len) in DuckDB is [1, len-1]: bigram i pairs toks[i],
-        # toks[i+1] (1-based). Spark mirrors with a 0-based sequence slice.
-        F.slice('toks', 1, F.greatest(F.size('toks') - 1, F.lit(0))),
-        lambda x, i: F.concat_ws(' ', x, F.col('toks')[i + 1]),
-    )
-    b = (
-        t.select('doc_id', F.explode(bigrams).alias('g'))
-        .groupBy('doc_id', 'g')
-        .agg(F.count(F.lit(1)).alias('cnt'))
-    )
-    bi = b.groupBy('doc_id').agg(
-        F.sum('cnt').alias('n_bigrams'),
-        F.sum(F.when(F.col('cnt') > 1, F.col('cnt')).otherwise(0)).alias('dup_bg'),
-    )
-
-    ttr = F.col('n_types').cast('double') / F.col('n_tokens')
-    top_frac = F.col('top_cnt').cast('double') / F.col('n_tokens')
-    dup_frac = F.when(
-        F.coalesce(F.col('n_bigrams'), F.lit(0)) > 0,
-        F.col('dup_bg').cast('double') / F.col('n_bigrams'),
-    ).otherwise(0.0)
-    return uni.join(bi, 'doc_id', 'left').select(
+    ttr, top_frac, dup_frac, passes = _gopher_ratios()
+    return _gopher_counts(docs).select(
         'doc_id',
         'n_tokens',
         ttr.alias('type_token_ratio'),
         top_frac.alias('top_token_frac'),
         dup_frac.alias('dup_bigram_frac'),
-        ((ttr >= 0.5) & (top_frac <= 0.125) & (dup_frac <= 0.25)).alias(
-            'gopher_pass'
-        ),
+        passes.alias('gopher_pass'),
     )
 
 
@@ -1058,51 +1071,14 @@ def pipeline_clean_corpus(spark, sf_dir):
     from .. import functions as CF
 
     docs = table(spark, sf_dir, 'documents')
-    # r11 optimization (same fixes as text_gopher_repetition and
-    # text_decontamination, whose stages this pipeline composes): the
-    # gopher unigram/bigram explodes and the corpus 5-gram pass run from a
-    # doc_id spread (core-wide on the few-file driver layout, and the
-    # per-doc aggregations reuse its clustering), and the benchmark-side
-    # gram subtree filters to the 256 bench docs BELOW the explode instead
-    # of exploding the whole corpus a second time. Measured 17.8s -> 2.3s
-    # best-of-5 at sf0.1; oracle-exact at sf0.001/0.01/0.1.
+    # The gopher counts and the corpus 5-gram pass run from a doc_id spread
+    # (core-wide on the few-file driver layout; the per-doc aggregations
+    # reuse its clustering). The benchmark-side gram subtree filters to
+    # the bench docs BELOW its explode, so the corpus is exploded once.
     docs_s = spread_small(docs, 'doc_id')
-    toks = F.split(F.trim(F.col('text')), r'\s+')
-    t = docs_s.select('doc_id', toks.alias('toks'))
-
-    u = (
-        t.select('doc_id', F.explode('toks').alias('g'))
-        .groupBy('doc_id', 'g')
-        .agg(F.count(F.lit(1)).alias('cnt'))
-    )
-    uni = u.groupBy('doc_id').agg(
-        F.sum('cnt').alias('n_tokens'),
-        F.count(F.lit(1)).alias('n_types'),
-        F.max('cnt').alias('top_cnt'),
-    )
-    bigrams = F.transform(
-        F.slice('toks', 1, F.greatest(F.size('toks') - 1, F.lit(0))),
-        lambda x, i: F.concat_ws(' ', x, F.col('toks')[i + 1]),
-    )
-    b = (
-        t.select('doc_id', F.explode(bigrams).alias('g'))
-        .groupBy('doc_id', 'g')
-        .agg(F.count(F.lit(1)).alias('cnt'))
-    )
-    bi = b.groupBy('doc_id').agg(
-        F.sum('cnt').alias('n_bigrams'),
-        F.sum(F.when(F.col('cnt') > 1, F.col('cnt')).otherwise(0)).alias('dup_bg'),
-    )
-    ttr = F.col('n_types').cast('double') / F.col('n_tokens')
-    top_frac = F.col('top_cnt').cast('double') / F.col('n_tokens')
-    dup_frac = F.when(
-        F.coalesce(F.col('n_bigrams'), F.lit(0)) > 0,
-        F.col('dup_bg').cast('double') / F.col('n_bigrams'),
-    ).otherwise(0.0)
-    gop = (
-        uni.join(bi, 'doc_id', 'left')
-        .filter((ttr >= 0.5) & (top_frac <= 0.125) & (dup_frac <= 0.25))
-        .select('doc_id', 'n_tokens', 'n_types')
+    *_, passes = _gopher_ratios()
+    gop = _gopher_counts(docs_s).filter(passes).select(
+        'doc_id', 'n_tokens', 'n_types'
     )
 
     bench = _bench_ids(docs)
@@ -2728,22 +2704,26 @@ def _source_overlap_oracle() -> str:
     """
 
 
-@register('quality_source_overlap', oracle=_source_overlap_oracle())
-def quality_source_overlap(spark, sf_dir):
-    """Pairwise shingle-vocabulary Jaccard between sources (module note)."""
-    # r11 optimization: the shingle explode + partial distinct below the
-    # persist ran inside the single scan task; spread_small restores
-    # core-wide execution (no-op on multi-split layouts).
+def _source_shingles(spark, sf_dir):
+    """Distinct (source, shingle) pairs over 3-gram shingles, persisted:
+    both the per-source totals and the pair counts read it. The doc_id
+    spread runs the shingle explode and the partial distinct core-wide on
+    the few-file driver layout (no-op on multi-split layouts)."""
     docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
-    sh = (
+    return (
         docs.select(
             'source', F.explode(_CF.shingles('text', 3)).alias('shingle')
         )
         .distinct()
         .persist()
     )
-    tot = sh.groupBy('source').agg(F.count(F.lit(1)).alias('n'))
-    pairs = (
+
+
+def _shared_shingle_counts(sh):
+    """Exact (source_a, source_b, n_shared) with source_a < source_b: one
+    groupBy on shingle emits the source pairs of each shingle's sorted
+    source set, so the shingle set is never self-joined."""
+    return (
         sh.groupBy('shingle')
         .agg(F.sort_array(F.collect_set('source')).alias('srcs'))
         .where(F.size('srcs') >= 2)
@@ -2761,6 +2741,14 @@ def quality_source_overlap(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias('n_shared'))
     )
+
+
+@register('quality_source_overlap', oracle=_source_overlap_oracle())
+def quality_source_overlap(spark, sf_dir):
+    """Pairwise shingle-vocabulary Jaccard between sources (module note)."""
+    sh = _source_shingles(spark, sf_dir)
+    tot = sh.groupBy('source').agg(F.count(F.lit(1)).alias('n'))
+    pairs = _shared_shingle_counts(sh)
     tot_a = tot.select(
         F.col('source').alias('source_a'), F.col('n').alias('n_a')
     )
@@ -3004,15 +2992,7 @@ def _overlap_hll_oracle() -> str:
 def quality_source_overlap_hll(spark, sf_dir):
     """HLL-sketch overlap estimates audited against the exact matrix (see
     module note)."""
-    # r11 optimization: same spread as quality_source_overlap (shared shape).
-    docs = spread_small(table(spark, sf_dir, 'documents'), 'doc_id')
-    sh = (
-        docs.select(
-            'source', F.explode(_CF.shingles('text', 3)).alias('shingle')
-        )
-        .distinct()
-        .persist()
-    )
+    sh = _source_shingles(spark, sf_dir)
     sk = sh.groupBy('source').agg(
         F.expr('hll_sketch_agg(shingle, 14)').alias('sk'),
         F.count(F.lit(1)).alias('n'),
@@ -3031,24 +3011,7 @@ def quality_source_overlap_hll(spark, sf_dir):
             ).alias('est_union'),
         )
     )
-    exact = (
-        sh.groupBy('shingle')
-        .agg(F.sort_array(F.collect_set('source')).alias('srcs'))
-        .where(F.size('srcs') >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(srcs, (a, i) -> "
-                    'transform(slice(srcs, i + 2, size(srcs) - i - 1), '
-                    "b -> named_struct('sa', a, 'sb', b))))"
-                )
-            ).alias('p')
-        )
-        .groupBy(
-            F.col('p.sa').alias('source_a'), F.col('p.sb').alias('source_b')
-        )
-        .agg(F.count(F.lit(1)).alias('n_shared'))
-    )
+    exact = _shared_shingle_counts(sh)
     est_inter = F.col('n_a') + F.col('n_b') - F.col('est_union')
     exact_union = F.col('n_a') + F.col('n_b') - F.col('n_shared')
     tol = F.greatest(F.lit(8), (exact_union * 0.02).cast('bigint'))

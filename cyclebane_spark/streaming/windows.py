@@ -17,6 +17,7 @@ is part of the engine's additive surface. Design:
 from __future__ import annotations
 
 import itertools
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -563,28 +564,23 @@ def latest_per_key(df: DataFrame) -> DataFrame:
     )
 
 
-def cdc_upsert_parquet(stream: DataFrame, base_dir: str) -> str:
-    """Streaming upsert sink: foreachBatch MERGE of each micro-batch into a
-    last-write-wins parquet snapshot; returns the final snapshot path.
-
-    The plain-parquet statement of what Delta/Iceberg ``MERGE INTO`` does:
-    each batch is compacted to its per-key latest, merged with the previous
-    snapshot, and written as a NEW versioned snapshot directory (parquet
-    cannot be overwritten while being read, so the swap is
-    write-new-then-repoint — the same copy-on-write move table formats make
-    atomic via their metadata log). Idempotent under batch replay: merging
-    the same batch twice is a no-op because max_by is. Scale: snapshot
-    rewrite cost is O(keys), the standard compaction trade; a real
-    deployment partitions the snapshot by key range so each batch rewrites
-    only touched partitions.
-    """
+def _snapshot_merge(
+    stream: DataFrame,
+    base_dir: str,
+    compact: Callable[[DataFrame], DataFrame],
+) -> str:
+    """Run ``stream`` to completion through a foreachBatch MERGE: each
+    batch is folded by ``compact`` (a per-key argmax, so the fold is
+    associative and replay-idempotent) together with the previous
+    snapshot, and written as a new ``v<batch_id>`` snapshot directory.
+    Returns the final snapshot path."""
     state: dict[str, str | None] = {'cur': None}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        latest = latest_per_key(batch_df)
+        latest = compact(batch_df)
         if state['cur'] is not None:
-            latest = latest_per_key(
+            latest = compact(
                 sp.read.parquet(state['cur']).unionByName(latest)
             )
         out = f'{base_dir}/v{batch_id}'
@@ -600,6 +596,24 @@ def cdc_upsert_parquet(stream: DataFrame, base_dir: str) -> str:
     query.awaitTermination()
     assert state['cur'] is not None, 'stream produced no batches'
     return state['cur']
+
+
+def cdc_upsert_parquet(stream: DataFrame, base_dir: str) -> str:
+    """Streaming upsert sink: foreachBatch MERGE of each micro-batch into a
+    last-write-wins parquet snapshot; returns the final snapshot path.
+
+    The plain-parquet statement of what Delta/Iceberg ``MERGE INTO`` does:
+    each batch is compacted to its per-key latest, merged with the previous
+    snapshot, and written as a NEW versioned snapshot directory (parquet
+    cannot be overwritten while being read, so the swap is
+    write-new-then-repoint — the same copy-on-write move table formats make
+    atomic via their metadata log). Idempotent under batch replay: merging
+    the same batch twice is a no-op because max_by is. Scale: snapshot
+    rewrite cost is O(keys), the standard compaction trade; a real
+    deployment partitions the snapshot by key range so each batch rewrites
+    only touched partitions.
+    """
+    return _snapshot_merge(stream, base_dir, latest_per_key)
 
 
 def latest_per_key_with_op(df: DataFrame) -> DataFrame:
@@ -636,28 +650,7 @@ def cdc_upsert_parquet_tombstones(stream: DataFrame, base_dir: str) -> str:
     THEN DELETE`` semantics with the delete deferred to read time (a real
     deployment drops tombstones older than the replay horizon during
     periodic compaction)."""
-    state: dict[str, str | None] = {'cur': None}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        latest = latest_per_key_with_op(batch_df)
-        if state['cur'] is not None:
-            latest = latest_per_key_with_op(
-                sp.read.parquet(state['cur']).unionByName(latest)
-            )
-        out = f'{base_dir}/v{batch_id}'
-        latest.write.mode('overwrite').parquet(out)
-        state['cur'] = out
-
-    query = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option('checkpointLocation', f'{base_dir}/_ckpt')
-        .start()
-    )
-    query.awaitTermination()
-    assert state['cur'] is not None, 'stream produced no batches'
-    return state['cur']
+    return _snapshot_merge(stream, base_dir, latest_per_key_with_op)
 
 
 def static_enrich(

@@ -5,6 +5,7 @@ relationships) checked directly on small-SF output."""
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 from cyclebane_spark.queries import queries
 
@@ -231,10 +232,8 @@ def test_largestar_cc_agrees_with_label_propagation_on_adversarial_graphs(spark)
     re-rooting), two disjoint cliques, and isolated singletons."""
     from cyclebane_spark.queries.dedup import (
         _connected_components,
-        _star_round,
+        _largestar_components,
     )
-    from pyspark.sql import Observation
-    import pyspark.sql.functions as F
 
     chain = [(i, i + 1) for i in range(20, 40)]  # one 21-node path
     star = [(99, v) for v in range(90, 99)]  # hub has the LARGEST id
@@ -256,51 +255,49 @@ def test_largestar_cc_agrees_with_label_propagation_on_adversarial_graphs(spark)
         ).collect()
     }
 
-    edges = (
-        pairs.select(F.col('doc_a').alias('s'), F.col('doc_b').alias('d'))
-        .union(pairs.select(F.col('doc_b').alias('s'), F.col('doc_a').alias('d')))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = None
-    for _ in range(12):
-        sym = _star_round(
-            edges.select('s', 'd')
-            .unionByName(
-                edges.select(F.col('d').alias('s'), F.col('s').alias('d'))
-            )
-            .distinct(),
-            large=True,
-        )
-        directed = sym.select(
-            F.greatest('s', 'd').alias('s'), F.least('s', 'd').alias('d')
-        ).distinct()
-        obs = Observation()
-        edges = (
-            _star_round(directed, large=False)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias('n'),
-                F.bit_xor(F.xxhash64('s', 'd')).alias('sig'),
-            )
-            .localCheckpoint()
-        )
-        cur = (obs.get['n'], obs.get['sig'])
-        if cur == prev:
-            break
-        prev = cur
-    stars = edges.groupBy('s').agg(F.min('d').alias('root'))
     ls = {
         r['doc_id']: r['cluster_id']
-        for r in nodes.join(stars, nodes['doc_id'] == stars['s'], 'left')
-        .select('doc_id', F.coalesce('root', 'doc_id').alias('cluster_id'))
-        .collect()
+        for r in _largestar_components(
+            pairs, nodes, 'doc_a', 'doc_b', 'doc_id'
+        ).collect()
     }
 
     assert lp == ls
     assert ls[40] == 20 and ls[21] == 20  # chain collapses to its min
     assert ls[99] == 90  # star re-roots at the MIN member, not the hub
     assert ls[7] == 7 and ls[8] == 8  # singletons self-label
+
+
+def _chain(spark, n):
+    """One n-node path 0 - 1 - ... - n-1 (diameter n-1)."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], ['doc_a', 'doc_b']
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(n)], ['doc_id'])
+    return pairs, nodes
+
+
+def test_label_propagation_round_cap_fails_loudly(spark):
+    """A chain whose diameter exceeds max_rounds raises instead of
+    returning a partial labeling."""
+    from cyclebane_spark.queries.dedup import _connected_components
+
+    pairs, nodes = _chain(spark, 8)
+    with pytest.raises(RuntimeError, match='did not converge in 3 rounds'):
+        _connected_components(
+            pairs, nodes, 'doc_a', 'doc_b', 'doc_id', max_rounds=3
+        )
+
+
+def test_largestar_round_cap_fails_loudly(spark, monkeypatch):
+    """The alternating-star loop raises at its round cap too: one round can
+    never show a stable edge set, so a cap of 1 must fail."""
+    from cyclebane_spark.queries import dedup
+
+    monkeypatch.setattr(dedup, 'LARGESTAR_MAX_ROUNDS', 1)
+    pairs, nodes = _chain(spark, 8)
+    with pytest.raises(RuntimeError, match='did not converge in 1 rounds'):
+        dedup._largestar_components(pairs, nodes, 'doc_a', 'doc_b', 'doc_id')
 
 
 def test_hard_negatives_margins_and_labels(spark):

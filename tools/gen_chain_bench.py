@@ -22,12 +22,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     import pyspark.sql.functions as F
-    from pyspark.sql import Observation
 
     from cyclebane_spark.functions import bench_session
     from cyclebane_spark.queries.dedup import (
         _connected_components,
-        _star_round,
+        _largestar_components,
     )
 
     n_chains = int(sys.argv[1]) if len(sys.argv) > 1 else 200
@@ -61,43 +60,7 @@ def main() -> None:
     t_lp = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    edges = (
-        pairs.select(F.col('doc_a').alias('s'), F.col('doc_b').alias('d'))
-        .union(pairs.select(F.col('doc_b').alias('s'), F.col('doc_a').alias('d')))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = None
-    rounds = 0
-    for _ in range(15):
-        sym = _star_round(
-            edges.select('s', 'd')
-            .unionByName(edges.select(F.col('d').alias('s'), F.col('s').alias('d')))
-            .distinct(),
-            large=True,
-        )
-        directed = sym.select(
-            F.greatest('s', 'd').alias('s'), F.least('s', 'd').alias('d')
-        ).distinct()
-        obs = Observation()
-        edges = (
-            _star_round(directed, large=False)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias('n'),
-                F.bit_xor(F.xxhash64('s', 'd')).alias('sig'),
-            )
-            .localCheckpoint()
-        )
-        rounds += 1
-        cur = (obs.get['n'], obs.get['sig'])
-        if cur == prev:
-            break
-        prev = cur
-    stars = edges.groupBy('s').agg(F.min('d').alias('root'))
-    ls = nodes.join(stars, nodes['doc_id'] == stars['s'], 'left').select(
-        'doc_id', F.coalesce('root', 'doc_id').alias('cluster_id')
-    )
+    ls = _largestar_components(pairs, nodes, 'doc_a', 'doc_b', 'doc_id')
     ls_rows = ls.groupBy('cluster_id').count()
     ls_sig = ls_rows.agg(
         F.count(F.lit(1)).alias('n'),
@@ -117,7 +80,6 @@ def main() -> None:
         'label_propagation_s': round(t_lp, 2),
         'label_propagation_rounds': chain_len - 1,
         'alternating_star_s': round(t_star, 2),
-        'alternating_star_rounds': rounds,
         'components_identical': True,
         'loadavg_1m': os.getloadavg()[0],
     }))
